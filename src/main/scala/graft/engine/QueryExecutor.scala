@@ -52,9 +52,29 @@ import graft.tokenize.CodeTokenizer
   * pushed-down filter + ordered limit — no shuffle at all (round-1
   * VERDICT: the old code shuffled every docId of the corpus through
   * groupByKey for `repo:foo`).
+  *
+  * Physical paths of execute / executeAny / executeWithSnippets:
+  *   - driver-local (LocalSearch over the Searcher's LocalIndex): the
+  *     query terms' posting runs and the ≤k winners' docs rows (for a
+  *     regex, its candidates' rows in rank order until k pass) are read in
+  *     the driver and scored with the Spark path's code (scoreBucket,
+  *     RegexPlanner, Snippets); the result is a LocalRelation DataFrame
+  *     and runs no Spark job. Taken when ALL hold: exactly one DNF branch;
+  *     no `org:`/`repo:`/`path:`/`lang:`/`branch:`/`open:` label and no
+  *     `case:sensitive`; the target is a plain literal, a `symbol:`
+  *     literal, or a regex with at least one required gram; 1 ≤ k ≤
+  *     BroadcastKMax; the dict is cached in the driver; the searcher's
+  *     tombstones (if any) are shipped; and the summed df of the terms the
+  *     query reads is below the gate (LocalDfMax).
+  *   - Spark plan: every other query — multi-branch unions, metadata
+  *     filters, scored path fields, case-sensitive verify, regexes with no
+  *     required gram, unbounded k, big dicts, cogroup-sized tombstones and
+  *     over-gate queries. executePage and executeRepo always run here.
   */
 /** The four reference readers (query/execute.rs:373-387 dispatch order). */
-/** Materialized top-k row fed to the executor-side snippet pass. */
+/** Materialized top-k row fed to the snippet pass (executor-side on the
+  * Spark path, in the driver on the local path).
+  */
 private[engine] case class PageRow(docId: Long, score: Float, repo: String,
                                    path: String, lang: String,
                                    content: String, lineEnds: Array[Int])
@@ -107,6 +127,56 @@ object QueryExecutor {
     val segs = split(regexp_replace(name, "/+$", ""), "/")
     when(size(segs) >= 2, element_at(segs, -2)).otherwise(lit(""))
   }
+
+  /** Summed-df gate of the driver-local path: a query whose terms' dfs
+    * sum to this or more runs as a Spark plan. Set from the crossover
+    * measured with executeAny at k = 10 and local[4] on a 30k-file index
+    * of the benchmark's generated corpus (figures in ROADMAP direction
+    * 1): plain terms ran 1.6–4× faster locally up to df 23k and scoring
+    * alone ran 1.7× slower at 47k; regexes ran up to 2× faster below 40k
+    * when a candidate passed, 1.1× slower at 40k when none did (two full
+    * docs passes), and up to 2× slower above 58k.
+    */
+  private val LocalDfMax = 40000L
+
+  /** A file hit with its path highlight ranges (executeAny row). */
+  private[engine] def fileHit(r: FileHitRow, pathPatterns: Seq[String])
+      : (String, Long, String, String, Float, Seq[(Int, Int)]) = {
+    val hls = pathPatterns.flatMap(p =>
+      Snippets.highlight(r.path, p, caseSensitive = false))
+      .distinct.sorted
+    ("file", r.docId, r.repo, r.path, r.score, hls)
+  }
+
+  /** A page row with its snippets (executeWithSnippets row). One scan PER
+    * SPEC — each branch's pattern compiles in isolation (a combined
+    * alternation would renumber capturing groups, breaking branch-local
+    * backreferences, and Java's ordered alternation would shadow
+    * overlapping matches from later branches — round-3 review); then
+    * regions emitted by several branches merge per (window, data) with
+    * unioned highlights, so shared regions never duplicate.
+    */
+  private[engine] def snippetRow(r: PageRow,
+                                 specs: Seq[(String, Boolean, Boolean)])
+      : SnippetRow = {
+    val raw = specs.flatMap {
+      case (pat, false, cs) =>
+        Snippets.forDoc(r.content, r.lineEnds, pat, cs)
+      case (pat, true, cs) =>
+        Snippets.forDocSymbols(r.content, r.lineEnds, pat, cs,
+          lang = r.lang)
+    }
+    val snips = raw
+      .groupBy(s => (s.lineStart, s.lineEnd, s.data))
+      .map { case ((ls, le, data), g) =>
+        Snippets.Snippet(data, ls, le,
+          g.flatMap(_.highlights).distinct.sorted)
+      }
+      .toSeq.sortBy(s => (s.lineStart, s.lineEnd))
+    SnippetRow(r.docId, r.score, r.repo, r.path, r.lang, snips.size,
+      snips.map(_.highlights.size).sum,
+      snips.headOption.map(_.data).getOrElse(""))
+  }
 }
 
 sealed trait ReaderKind
@@ -117,11 +187,70 @@ object ReaderKind {
   case object Open extends ReaderKind
 }
 
-class QueryExecutor(searcher: Searcher) {
+class QueryExecutor(searcher: Searcher,
+                    /** Summed-df gate of the driver-local path. A
+                      * constructor param so tests can force the Spark
+                      * path (0) or an over-gate fallback on small corpora.
+                      */
+                    localDfMax: Long = QueryExecutor.LocalDfMax) {
   import searcher.spark.implicits._
 
   def execute(input: String, k: Int): Dataset[Hit] =
+    localRows(input, k, fields = false, content = false) match {
+      case Some(rows) => rows.map(r => Hit(r.docId, r.score)).toDS()
+      case None => sparkTopK(input, k)
+    }
+
+  private def sparkTopK(input: String, k: Int): Dataset[Hit] =
     executeAllHits(input).orderBy($"score".desc, $"docId".asc).limit(k)
+
+  /** The driver-local scorer, when the searcher's tombstones (if any) are
+    * shipped — a cogroup-sized tombstone set keeps every query on Spark.
+    */
+  private lazy val localSearch: Option[LocalSearch] =
+    searcher.shippedDeadDocIds.map(
+      new LocalSearch(searcher, searcher.local, _, localDfMax))
+
+  /** Whether a branch has the driver-local path's shape: a target and no
+    * metadata label, case-insensitive.
+    */
+  private def localShape(b: FlatQuery): Boolean =
+    b.target.isDefined && b.open.isEmpty && b.org.isEmpty &&
+      b.repo.isEmpty && b.path.isEmpty && b.lang.isEmpty &&
+      b.branch.isEmpty && !b.caseSensitive.contains(true)
+
+  /** Top-k of `input` answered in the driver, in (score desc, docId asc)
+    * order, or None when the query needs the Spark plan (see the class
+    * doc). With `fields` the rows carry repo, path and lang, with
+    * `content` also content and lineEnds; otherwise only docId and score.
+    */
+  private def localRows(input: String, k: Int, fields: Boolean,
+                        content: Boolean): Option[Seq[PageRow]] = {
+    if (k < 1 || k > BroadcastKMax) return None
+    val b = QueryParser.parse(input) match {
+      case Seq(b) if localShape(b) => b
+      case _ => return None
+    }
+    if (!searcher.dictCached) return None
+    localSearch.flatMap { ls =>
+      def rows(hits: Seq[Hit]): Seq[PageRow] =
+        if (!fields) hits.map(h => PageRow(h.docId, h.score, null, null,
+          null, null, null))
+        else {
+          val byId = searcher.local.docRows(hits.map(_.docId).toSet, content)
+          hits.flatMap(h => byId.get(h.docId).map(_.copy(score = h.score)))
+        }
+      b.target.get match {
+        case ContentTarget(l) if l.isRegex || b.globalRegex.contains(true) =>
+          ls.regex(l.value, k)
+        case ContentTarget(l) =>
+          ls.terms(CodeTokenizer.tokenize(l.value).toSeq, k).map(rows)
+        case SymbolTarget(l) =>
+          ls.terms(CodeTokenizer.tokenize(l.value).map("s:" + _).toSeq, k)
+            .map(rows)
+      }
+    }
+  }
 
   /** Broadcast a top-k hit set only when k is page-sized. The reference
     * pages at 100 (query/execute.rs:25-31), so the production join of
@@ -206,21 +335,33 @@ class QueryExecutor(searcher: Searcher) {
       // frame, so overlapping them removes three job latencies from the
       // page's critical path). hits.count() doubles as the materializing
       // action AND the total.
-      import scala.concurrent.{Await, Future}
+      // The blocking collects run on a pool of their own, not the global
+      // ForkJoinPool, and all three are awaited — failed or not — before
+      // the finally unpersists the frame they read.
+      import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       val total = hits.count()
       def harvest(df: DataFrame): Seq[(String, Long)] =
         df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-      val fTopk = Future {
-        hits.select($"docId", $"score")
-          .orderBy($"score".desc, $"docId".asc).limit(k).as[Hit]
-          .collect().toSeq
-      }
-      val fLang = Future { harvest(pageHistogram(hits, "lang", statsTopN)) }
-      val fRepo = Future { harvest(pageHistogram(hits, "repo", statsTopN)) }
-      PageMeta(Await.result(fTopk, Duration.Inf), total,
-        Await.result(fLang, Duration.Inf), Await.result(fRepo, Duration.Inf))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(3,
+        (r: Runnable) => {
+          val t = new Thread(r, "graft-page-harvest")
+          t.setDaemon(true)
+          t
+        })
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      try {
+        val fTopk = Future {
+          hits.select($"docId", $"score")
+            .orderBy($"score".desc, $"docId".asc).limit(k).as[Hit]
+            .collect().toSeq
+        }
+        val fLang = Future { harvest(pageHistogram(hits, "lang", statsTopN)) }
+        val fRepo = Future { harvest(pageHistogram(hits, "repo", statsTopN)) }
+        Seq(fTopk, fLang, fRepo).foreach(Await.ready(_, Duration.Inf))
+        PageMeta(Await.result(fTopk, Duration.Inf), total,
+          Await.result(fLang, Duration.Inf), Await.result(fRepo, Duration.Inf))
+      } finally pool.shutdown()
     } finally hits.unpersist()
   }
 
@@ -390,36 +531,18 @@ class QueryExecutor(searcher: Searcher) {
   def executeWithSnippets(input: String, k: Int): DataFrame = {
     import searcher.spark.implicits._
     val specs = snippetSpecs(input)
-    val page = searcher.docs
-      .join(hitsSide(execute(input, k).toDF(), k), "docId")
-      .select($"docId", $"score", $"repo", $"path", $"lang", $"content",
-        $"lineEnds")
-      .as[PageRow]
-    page.map { r =>
-      // one scan PER SPEC — each branch's pattern compiles in isolation
-      // (a combined alternation would renumber capturing groups, breaking
-      // branch-local backreferences, and Java's ordered alternation would
-      // shadow overlapping matches from later branches — round-3 review);
-      // then regions emitted by several branches merge per (window, data)
-      // with unioned highlights, so shared regions never duplicate
-      val raw = specs.flatMap {
-        case (pat, false, cs) =>
-          Snippets.forDoc(r.content, r.lineEnds, pat, cs)
-        case (pat, true, cs) =>
-          Snippets.forDocSymbols(r.content, r.lineEnds, pat, cs,
-            lang = r.lang)
-      }
-      val snips = raw
-        .groupBy(s => (s.lineStart, s.lineEnd, s.data))
-        .map { case ((ls, le, data), g) =>
-          Snippets.Snippet(data, ls, le,
-            g.flatMap(_.highlights).distinct.sorted)
-        }
-        .toSeq.sortBy(s => (s.lineStart, s.lineEnd))
-      SnippetRow(r.docId, r.score, r.repo, r.path, r.lang, snips.size,
-        snips.map(_.highlights.size).sum,
-        snips.headOption.map(_.data).getOrElse(""))
-    }.toDF().orderBy($"score".desc, $"docId".asc)
+    localRows(input, k, fields = true, content = true) match {
+      case Some(rows) =>
+        rows.map(QueryExecutor.snippetRow(_, specs)).toDF()
+      case None =>
+        searcher.docs
+          .join(hitsSide(sparkTopK(input, k).toDF(), k), "docId")
+          .select($"docId", $"score", $"repo", $"path", $"lang", $"content",
+            $"lineEnds")
+          .as[PageRow]
+          .map(QueryExecutor.snippetRow(_, specs))
+          .toDF().orderBy($"score".desc, $"docId".asc)
+    }
   }
 
   // ------------------------------------------------------------ dispatch
@@ -575,22 +698,26 @@ class QueryExecutor(searcher: Searcher) {
           .filter(l => l.isRegex || l.value.nonEmpty)
           .map(l => if (l.isRegex) l.value
                     else java.util.regex.Pattern.quote(l.value))
-        // docs side pruned to the ≤k winners via an explicit broadcast of
-        // the page-sized hit set (mirrors executeWithSnippets; PlanSpec
-        // asserts the BroadcastHashJoin) — never a shuffle of the docs
-        // table; unbounded k degrades to a shuffle join (hitsSide)
-        searcher.docs.select($"docId", $"repo", $"path")
-          .join(hitsSide(execute(input, k).toDF(), k), "docId")
-          .select($"docId", $"score", $"repo", $"path")
-          .as[FileHitRow]
-          .map { r =>
-            val hls = pathPatterns.flatMap(p =>
-              Snippets.highlight(r.path, p, caseSensitive = false))
-              .distinct.sorted
-            ("file", r.docId, r.repo, r.path, r.score, hls)
-          }
-          .toDF("kind", "id", "name", "path", "score", "highlights")
-          .orderBy($"score".desc, $"id".asc)
+        val cols = Seq("kind", "id", "name", "path", "score", "highlights")
+        localRows(input, k, fields = true, content = false) match {
+          case Some(rows) =>
+            rows.map(r => QueryExecutor.fileHit(
+              FileHitRow(r.docId, r.score, r.repo, r.path), pathPatterns))
+              .toDF(cols: _*)
+          case None =>
+            // docs side pruned to the ≤k winners via an explicit broadcast
+            // of the page-sized hit set (mirrors executeWithSnippets;
+            // PlanSpec asserts the BroadcastHashJoin) — never a shuffle of
+            // the docs table; unbounded k degrades to a shuffle join
+            // (hitsSide)
+            searcher.docs.select($"docId", $"repo", $"path")
+              .join(hitsSide(sparkTopK(input, k).toDF(), k), "docId")
+              .select($"docId", $"score", $"repo", $"path")
+              .as[FileHitRow]
+              .map(QueryExecutor.fileHit(_, pathPatterns))
+              .toDF(cols: _*)
+              .orderBy($"score".desc, $"id".asc)
+        }
       case Some(ReaderKind.Repo) =>
         executeRepoHighlightedDF(input, k)
           .select(lit("repo").as("kind"), $"repoId".as("id"), $"name",

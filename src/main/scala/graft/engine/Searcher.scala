@@ -15,7 +15,7 @@ case class Hit(docId: Long, score: Float)
 /** Top-k BM25 query engine over an IndexBuilder output (SURVEY §3.1 steps
   * 5–7 re-expressed in Spark).
   *
-  * Two physical paths, required to be result-identical (tested):
+  * Three physical paths, required to be result-identical (tested):
   *   - exhaustive: decode candidate postings → per-(term,doc) partial score
   *     → per-doc ordered f32 sum → global top-k. The correctness baseline.
   *   - block-max WAND: per docId-range bucket, cursor-based conjunctive /
@@ -26,11 +26,22 @@ case class Hit(docId: Long, score: Float)
   *     TakeOrderedAndProject merges. Per-bucket evaluation is what makes
   *     WAND distributable: buckets are non-overlapping docId ranges, so
   *     local-top-k ∪ merge ≡ global top-k.
+  *   - driver-local (LocalIndex + LocalSearch, used by QueryExecutor for
+  *     small single-branch queries): the query terms' posting runs and
+  *     the ≤k winners' docs rows (for a regex, its candidates' rows in
+  *     rank order until k pass) are read in the driver through Spark's
+  *     parquet reader, and the same per-bucket scoreBucket runs over them
+  *     — no Spark job. Each read pushes an `In` filter on `term` /
+  *     `docId` into the parquet reader, which skips the row groups and
+  *     pages whose min/max cannot hold a wanted key; postings and content
+  *     are never cached in the driver.
   *
   * Scale notes: the postings scan prunes on the `term` column (parquet
-  * min/max row-group stats — postings are written sorted by term), dict
-  * lookups collect only the ≤dozens of query-term rows to the driver, and
-  * the score aggregation shuffles only candidate postings, never the index.
+  * min/max row-group stats — each postings file is sorted by term, but
+  * files are hash-partitioned on (term, bucket), so a file whose single
+  * row group spans every term prunes nothing), dict lookups collect only
+  * the ≤dozens of query-term rows to the driver, and the score
+  * aggregation shuffles only candidate postings, never the index.
   */
 class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
   import spark.implicits._
@@ -65,11 +76,18 @@ class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
     */
   private val DictCacheMaxTerms = 2000000L
   @transient private lazy val dictCache: Option[Map[String, Long]] = {
-    val c = dict.count()
-    if (c <= DictCacheMaxTerms)
-      Some(dict.collect().map(d => d.term -> d.df).toMap)
+    // one pass over the dict (no separate count): a dict over the gate
+    // shows up as DictCacheMaxTerms + 1 rows
+    val rows = dict.limit((DictCacheMaxTerms + 1).toInt).collect()
+    if (rows.length <= DictCacheMaxTerms)
+      Some(rows.iterator.map(d => d.term -> d.df).toMap)
     else None
   }
+  private[engine] def dictCached: Boolean = dictCache.isDefined
+
+  /** Driver-local reads of this index's files (the small-query path). */
+  @transient private[engine] lazy val local: LocalIndex =
+    new LocalIndex(spark, postings, docs)
 
   /** Per-term (df, BM25 weight) for a query; terms absent from the dict
     * have df = 0 (they match nothing).
@@ -155,13 +173,15 @@ class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
     scoreAll(terms, weights, conjunctive)
       .orderBy($"score".desc, $"docId".asc).limit(k)
 
-  /** Tombstoned docIds, sorted, when small enough to ship to executors —
-    * MultiSearcher overrides with its size-gated set; the plain Searcher
-    * has none. Drives the dead-doc skip inside the WAND scorers (a dead
-    * doc must never occupy a local top-k slot, or it starves live docs
-    * below k).
+  /** Tombstoned docIds, sorted, when small enough to ship to executors
+    * (and to the driver-local path); None when the set is too large to
+    * ship (MultiSearcher's cogroup path). MultiSearcher overrides with its
+    * size-gated set; the plain Searcher has none. Drives the dead-doc skip
+    * inside the WAND scorers (a dead doc must never occupy a local top-k
+    * slot, or it starves live docs below k).
     */
-  protected def deadDocIdsSorted: Array[Long] = Array.emptyLongArray
+  private[graft] def shippedDeadDocIds: Option[Array[Long]] =
+    Some(Array.emptyLongArray)
 
   /** Block-max WAND / conjunctive path: postings of the query terms are
     * re-keyed by bucket so each task sees complete runs for its docId
@@ -177,7 +197,8 @@ class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
   def wandTopK(terms: Seq[String], weights: Map[String, Float], k: Int,
                conjunctive: Boolean): Dataset[Hit] = {
     val bW = spark.sparkContext.broadcast(weights)
-    val bDead = spark.sparkContext.broadcast(deadDocIdsSorted)
+    val bDead = spark.sparkContext.broadcast(
+      shippedDeadDocIds.getOrElse(Array.emptyLongArray))
     val avgdl = stats.avgdl.toFloat
     val nTerms = terms.size
     val candidates = postings.filter($"term".isin(terms: _*))

@@ -68,8 +68,8 @@ class MultiSearcher(spark0: SparkSession, generations: Seq[String],
   private def tombstoneSide: DataFrame =
     if (shippedTombstones.isDefined) broadcast(tombstones) else tombstones
 
-  override protected def deadDocIdsSorted: Array[Long] =
-    shippedTombstones.getOrElse(Array.emptyLongArray)
+  override private[graft] def shippedDeadDocIds: Option[Array[Long]] =
+    shippedTombstones
 
   override lazy val postings: Dataset[PostingRun] =
     spark0.read.parquet(generations.map(g => s"$g/postings"): _*)

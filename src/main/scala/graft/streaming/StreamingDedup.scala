@@ -41,7 +41,7 @@ class StreamingDedup(spark: SparkSession, stateDir: String) {
     * with zero rows — silent data loss). Ids are parsed numerically;
     * lexicographic name order would misorder gen-10 vs gen-2.
     */
-  private def gens(batchId: Long): Seq[String] = {
+  private[graft] def gens(batchId: Long): Seq[String] = {
     // Hadoop FileSystem listing, not java.io.File (round-5 ADVICE): on a
     // DFS/object-store stateDir a java.io listing silently sees ZERO
     // generations and the stream dedups nothing across batches — the
@@ -53,13 +53,15 @@ class StreamingDedup(spark: SparkSession, stateDir: String) {
     val fs = root.getFileSystem(hconf)
     if (!fs.exists(root)) return Seq.empty
     fs.listStatus(root).toSeq
-      .filter { st =>
+      .flatMap { st =>
         val name = st.getPath.getName
-        st.isDirectory && name.startsWith("gen-") &&
-          name.drop(4).toLongOption.exists(_ < batchId) &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
+        val id = if (name.startsWith("gen-")) name.drop(4).toLongOption
+                 else None
+        id.filter(_ < batchId && st.isDirectory &&
+            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
+          .map(_ -> st.getPath.toString)
       }
-      .map(_.getPath.toString).sorted
+      .sortBy(_._1).map(_._2)
   }
 
   private def readSeen(batchId: Long): DataFrame = {

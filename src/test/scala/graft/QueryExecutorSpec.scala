@@ -475,6 +475,17 @@ class QueryExecutorSpec extends AnyFunSuite {
     assert(pm1.total == pm.total && pm1.topk == pm.topk)
   }
 
+  test("executePage: a failing top-k action still unpersists the candidate " +
+       "pass after every harvest action finished") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a negative k makes the top-k action throw while both histogram
+    // actions run over the cached frame
+    intercept[Exception](exec.executePage("parse", -1))
+    assert(sc.getPersistentRDDs.keySet == before,
+      s"leaked: ${sc.getPersistentRDDs.keySet -- before}")
+  }
+
   test("executeAny file hits carry path highlight ranges (execute.rs:603-607)") {
     val f = exec.executeAny("path:mod1 if", 50).collect()
     assert(f.nonEmpty)

@@ -76,4 +76,16 @@ class StreamingSpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == want)
   }
+
+  test("StreamingDedup lists committed generations in numeric id order") {
+    val state = TestSpark.tempDir("sdedup-gens")
+    for (g <- Seq(10, 2, 1, 11)) {
+      val d = new java.io.File(s"$state/gen-$g")
+      d.mkdirs()
+      new java.io.File(d, "_SUCCESS").createNewFile()
+    }
+    new java.io.File(s"$state/gen-3").mkdirs() // uncommitted: skipped
+    val sd = new graft.streaming.StreamingDedup(spark, state)
+    assert(sd.gens(11).map(_.split('/').last) == Seq("gen-1", "gen-2", "gen-10"))
+  }
 }
