@@ -109,7 +109,6 @@ object BenchExtra {
     timed("ivf_centroids_64") { Similarity.ivfCentroids(embs, nlist = 64) }
 
     // ---- dedup family, noop-isolated
-    timed("minhash_long_noop") { noop(Dedup.minhash(docs)) }
     timed("minhash_bands_noop") { noop(Dedup.minhashBands(docs)) }
     timed("simhash_noop") { noop(Dedup.simhash(docs)) }
     timed("simhash64_noop") { noop(Dedup.simhash64Bands(docs)) }

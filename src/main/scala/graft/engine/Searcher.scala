@@ -65,9 +65,10 @@ class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
     * (e.g. incremental deltas).
     */
   lazy val repoIndex: Option[Searcher] =
-    if (new java.io.File(s"$indexRoot/repoIndex/dict/_SUCCESS").exists())
-      Some(new Searcher(spark, s"$indexRoot/repoIndex"))
-    else None
+    repoIndexRoot.map(new Searcher(spark, _))
+
+  protected def repoIndexRoot: Option[String] = Some(s"$indexRoot/repoIndex")
+    .filter(p => graft.util.FsUtil.isCommitted(s"$p/dict"))
 
   /** Dict cached on the driver when small enough (one lookup job total
     * instead of one per query). At web scale the term dictionary can

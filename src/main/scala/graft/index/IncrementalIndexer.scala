@@ -3,6 +3,9 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.FsUtil
+import graft.util.FsUtil.isCommitted
+
 /** Incremental index maintenance — the Spark shape of the reference's
   * repo-sync pipeline (SURVEY §3.2, §4.5): bloop keeps a sqlite FileCache
   * of blake3 keys, indexes only changed files and deletes stale docs by
@@ -52,8 +55,7 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     */
   private def deltaCount(): Int =
     Iterator.from(1)
-      .takeWhile(g =>
-        new java.io.File(deltaPath(g), "docs/_SUCCESS").exists())
+      .takeWhile(g => isCommitted(s"${deltaPath(g)}/docs"))
       .size
 
   /** Live generation roots, in creation order. Adopts a committed but
@@ -74,11 +76,9 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
   /** Generation dirs by on-disk markers only — no layout-version gate.
     * migrate() reads through this to rebuild stale-format roots.
     */
-  private def rawGenerations(): Seq[String] = {
-    val base = new java.io.File(basePath)
-    (if (new java.io.File(base, "docs/_SUCCESS").exists()) Seq(base.getPath)
-     else Seq.empty) ++ (1 to deltaCount()).map(deltaPath)
-  }
+  private def rawGenerations(): Seq[String] =
+    (if (isCommitted(s"$basePath/docs")) Seq(basePath) else Seq.empty) ++
+      (1 to deltaCount()).map(deltaPath)
 
   def buildBase(corpus: DataFrame): Unit =
     new IndexBuilder(spark, basePath, bucketSize).build(corpus)
@@ -93,31 +93,25 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
       .join(readTombstones(), Seq("docId"), "left_anti"))
   }
 
-  /** Tombstones are stored as monotonically versioned dirs tombstones-N;
-    * the highest N with a `_SUCCESS` marker is the live set (Spark's job
-    * commit IS the pointer flip). A crash mid-write leaves a version
-    * without `_SUCCESS` (ignored); a crash before cleanup leaves stale
-    * lower versions (ignored, removed on the next append). Never a window
-    * where the set is lost (round-1 ADVICE: the old rm+rename swap had
-    * one).
+  /** Tombstones are versioned dirs tombstones-N (FsUtil's protocol): the
+    * highest committed N is the live set, so Spark's job commit IS the
+    * pointer flip and a crash never leaves a window where the set is lost
+    * (round-1 ADVICE: the old rm+rename swap had one).
     */
   private def tombstoneDir(v: Int) = s"$root/tombstones-$v"
 
-  /** Complete versions of a versioned-dir family `<prefix>-N` under the
-    * root, by exact basename match + completion-marker check — shared by
-    * tombstones and the repo sub-index refresh.
+  /** Every N of a dir family `<prefix>-N` under the root, ascending, by
+    * exact basename match — shared by tombstones, the repo sub-index
+    * refresh and finishMerge's delta sweep.
     */
-  private def versionedDirs(prefix: String, marker: String): Seq[Int] = {
+  private def versions(prefix: String): Seq[Int] = {
     val re = ("^" + java.util.regex.Pattern.quote(prefix) + "-(\\d+)$").r
-    val fs = Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-    fs.iterator.flatMap(f => f.getName match {
-      case re(v) if new java.io.File(f, marker).exists() => Some(v.toInt)
-      case _ => None
-    }).toSeq.sorted
+    FsUtil.list(root).map(_.getPath.getName).collect { case re(v) => v.toInt }
+      .sorted
   }
 
   private def tombstoneVersions(): Seq[Int] =
-    versionedDirs("tombstones", "_SUCCESS")
+    versions("tombstones").filter(v => isCommitted(tombstoneDir(v)))
 
   def readTombstones(): DataFrame =
     tombstoneVersions().lastOption match {
@@ -180,11 +174,11 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     // not once per downstream action.
     val gen = deltaCount() + 1
     val staging = s"${deltaPath(gen)}.staging"
-    rmDir(staging)
+    FsUtil.rmTree(staging)
     fresh.write.mode("overwrite").parquet(staging)
     val freshDf = spark.read.parquet(staging)
     val freshCount = freshDf.count()
-    if (freshCount == 0) { rmDir(staging); return 0L }
+    if (freshCount == 0) { FsUtil.rmTree(staging); return 0L }
     // intent marker BEFORE the first repo-set mutation: a crash between the
     // delta/tombstone commit and the repo-index refresh would otherwise
     // leave increments lost forever — the incremental liveRepoNames derives
@@ -202,21 +196,20 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     // written before the build lets healIngest() finish the delete on the
     // next mutation/searcher. The marker carries (gen, offset) so healing
     // can tell old versions (docId ≤ offset) from the delta's own rows.
-    java.nio.file.Files.writeString(tombstoneIntentMarker.toPath,
-      s"$gen $offset")
+    FsUtil.writeMarker(tombstoneIntentMarker, s"$gen $offset")
     // deltas skip the per-generation repo sub-index; the live-set repo
     // index is refreshed out of band below (the reference likewise
     // rewrites its Repo index out of band of file deltas, indexes/repo.rs)
     val builder = new IndexBuilder(spark, deltaPath(gen), bucketSize,
       docIdOffset = offset, includeRepoIndex = false)
     builder.build(freshDf)
-    if (crashAfterDelta) { rmDir(staging); return freshCount }
+    if (crashAfterDelta) { FsUtil.rmTree(staging); return freshCount }
     // tombstone old versions of keys being re-added (update = delete+add,
     // reference indexes.rs:244 semantics) — live rows with docId ≤ offset
     // are by construction not the delta's own
     tombstoneStaleVersions(deltaPath(gen), offset)
-    tombstoneIntentMarker.delete()
-    rmDir(staging)
+    FsUtil.rmTree(tombstoneIntentMarker)
+    FsUtil.rmTree(staging)
     // added names come from the just-committed delta's own docs — a
     // column-pruned scan of ONE generation, O(batch)
     refreshRepoIndex(added =
@@ -241,8 +234,7 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     }
   }
 
-  private def tombstoneIntentMarker =
-    new java.io.File(s"$root/TOMBSTONE_INTENT")
+  private def tombstoneIntentMarker = s"$root/TOMBSTONE_INTENT"
 
   /** Crash healing for the ingest pipeline, run at the head of every
     * mutation and of searcher() — deliberately NOT from generations()
@@ -258,26 +250,18 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     *     (duplicate results) — finish the delete now.
     */
   private def healIngest(): Unit = {
-    var n = deltaCount()
-    while (n >= 1 &&
-        !new java.io.File(deltaPath(n), "dict/_SUCCESS").exists()) {
-      rmDir(deltaPath(n))
-      n -= 1
-    }
-    val m = tombstoneIntentMarker
-    if (m.exists()) {
-      val parts = java.nio.file.Files.readString(m.toPath).trim.split(" ")
-      val gen = parts(0).toInt
-      val offset = parts(1).toLong
-      if (new java.io.File(deltaPath(gen), "dict/_SUCCESS").exists())
-        tombstoneStaleVersions(deltaPath(gen), offset)
+    (deltaCount() to 1 by -1)
+      .takeWhile(g => !isCommitted(s"${deltaPath(g)}/dict"))
+      .foreach(g => FsUtil.rmTree(deltaPath(g)))
+    FsUtil.readMarker(tombstoneIntentMarker).foreach { m =>
+      val Array(gen, offset) = m.split(" ")
+      if (isCommitted(s"${deltaPath(gen.toInt)}/dict"))
+        tombstoneStaleVersions(deltaPath(gen.toInt), offset.toLong)
       // marker without a committed delta: the partial delta was removed
       // above — nothing was mutated, nothing to tombstone
-      m.delete()
+      FsUtil.rmTree(tombstoneIntentMarker)
     }
   }
-
-  private def rmDir(path: String): Unit = graft.util.FsUtil.rmTree(path)
 
   /** Delete every document of a repo (reference delete-by-repo,
     * indexes/file.rs:221-226) via tombstones; physical removal happens at
@@ -299,12 +283,10 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     * (the increments it would pass describe only ITS batch, not the lost
     * one).
     */
-  private def intentMarker = new java.io.File(s"$root/REPO_REFRESH_INTENT")
+  private def intentMarker = s"$root/REPO_REFRESH_INTENT"
   private def beginRepoMutation(): Boolean = {
-    val stale = intentMarker.exists()
-    new java.io.File(root).mkdirs()
-    java.nio.file.Files.writeString(intentMarker.toPath,
-      "repo-index refresh pending")
+    val stale = FsUtil.exists(intentMarker)
+    FsUtil.writeMarker(intentMarker, "repo-index refresh pending")
     stale
   }
 
@@ -318,7 +300,7 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     val next = versions.lastOption.getOrElse(0) + 1
     readTombstones().union(docIds.select($"docId")).distinct()
       .write.mode("overwrite").parquet(tombstoneDir(next))
-    versions.foreach(v => rmDir(tombstoneDir(v)))
+    versions.foreach(v => FsUtil.rmTree(tombstoneDir(v)))
   }
 
   /** Repo-name sub-index versions: `repoIndex-N` dirs written by
@@ -326,15 +308,14 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     * versioned-dir commit pattern as the tombstones.
     */
   private def repoIndexVersions(): Seq[Int] =
-    versionedDirs("repoIndex", "dict/_SUCCESS")
+    versions("repoIndex").filter(v => isCommitted(s"$root/repoIndex-$v/dict"))
 
   /** Latest live repo-name sub-index: the newest refresh version, else the
     * base generation's own sub-index (built by buildBase).
     */
   def repoIndexPath: Option[String] =
     repoIndexVersions().lastOption.map(v => s"$root/repoIndex-$v")
-      .orElse(Some(s"$basePath/repoIndex").filter(p =>
-        new java.io.File(s"$p/dict/_SUCCESS").exists()))
+      .orElse(Some(s"$basePath/repoIndex").filter(p => isCommitted(s"$p/dict")))
 
   /** Live repo-name set, maintained INCREMENTALLY: the current sub-index's
     * own names ∪ the batch's names − a deleted repo. A small ingest or a
@@ -384,7 +365,7 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
           // intent is vacuously served — a leaked marker would force the
           // full liveDocs bootstrap on every later mutation (round-4
           // review)
-          intentMarker.delete()
+          FsUtil.rmTree(intentMarker)
           return
       }
     val v = repoIndexVersions().lastOption.getOrElse(0) + 1
@@ -392,10 +373,11 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     // a crashed partial build of this version could otherwise RESUME: its
     // committed stages (written under an older live set) would be kept by
     // the _SUCCESS gates and a stale name set would go live
-    rmDir(dst)
+    FsUtil.rmTree(dst)
     IndexBuilder.buildRepoIndexAt(spark, names, dst, bucketSize)
-    repoIndexVersions().filter(_ < v).foreach(o => rmDir(s"$root/repoIndex-$o"))
-    intentMarker.delete() // refresh committed: the pending intent is served
+    repoIndexVersions().filter(_ < v)
+      .foreach(o => FsUtil.rmTree(s"$root/repoIndex-$o"))
+    FsUtil.rmTree(intentMarker) // refresh committed: the intent is served
   }
 
   /** Searcher over all live generations with tombstone filtering and
@@ -409,10 +391,9 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     * silently stale read) when recovery work exists.
     */
   def searcher(): MultiSearcher = {
-    val rootDir = new java.io.File(root)
-    if (!rootDir.exists() || rootDir.canWrite()) {
+    if (FsUtil.writable(root)) {
       healIngest()
-      if (intentMarker.exists()) refreshRepoIndex(forceBootstrap = true)
+      if (FsUtil.exists(intentMarker)) refreshRepoIndex(forceBootstrap = true)
     } else requireNoPendingRecovery()
     new MultiSearcher(spark, generations(),
       readTombstones(), repoIndexPath = repoIndexPath)
@@ -424,14 +405,11 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     * repo names) and healing needs writes.
     */
   private def requireNoPendingRecovery(): Unit = {
-    val partialDeltas = Iterator.from(1)
-      .map(deltaPath)
-      .takeWhile(p => new java.io.File(p, "docs/_SUCCESS").exists())
-      .filterNot(p => new java.io.File(p, "dict/_SUCCESS").exists())
-      .map(_ => "partial-delta").toSeq
-    val pending = Seq(tombstoneIntentMarker, intentMarker,
-      new java.io.File(mergeMarker), new java.io.File(compactMarker))
-      .filter(_.exists()).map(_.getName) ++ partialDeltas
+    val partialDeltas = (1 to deltaCount()).filterNot(g =>
+      isCommitted(s"${deltaPath(g)}/dict")).map(_ => "partial-delta")
+    val pending = Seq(tombstoneIntentMarker, intentMarker, mergeMarker,
+      compactMarker).filter(FsUtil.exists).map(_.stripPrefix(s"$root/")) ++
+      partialDeltas
     if (pending.nonEmpty) throw new IllegalStateException(
       s"index at $root has pending crash-recovery work " +
         s"(${pending.mkString(", ")}) but the root is read-only — " +
@@ -458,14 +436,18 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
       .join(readTombstones(), Seq("docId"), "left_anti")
       .select($"repo", $"path", $"commit", $"lang", $"content",
         $"contentSha", $"branch")
-    rmDir(newBasePath) // a stale pre-marker attempt is dead weight
+    swapInNewBase(live)
+  }
+
+  /** Build `live` as base-new and make it the only generation. */
+  private def swapInNewBase(live: DataFrame): Unit = {
+    FsUtil.rmTree(newBasePath) // a stale pre-marker attempt is dead weight
     new IndexBuilder(spark, newBasePath, bucketSize).build(live)
     // COMMIT POINT: once the marker exists, base-new is the authoritative
     // index and every read path (generations()) finishes the swap before
     // answering — there is no window where deltas/tombstones are gone but
     // the new base is not live, or where deleted docs resurrect.
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(compactMarker), "base-new is authoritative")
+    FsUtil.writeMarker(compactMarker, "base-new is authoritative")
     finishCompaction()
   }
 
@@ -508,13 +490,10 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
       .filter($"docId" === $"maxDocId")
       .select($"repo", $"path", $"commit", $"lang", $"content",
         $"contentSha", $"branch")
-    rmDir(newBasePath)
-    new IndexBuilder(spark, newBasePath, bucketSize).build(live)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(compactMarker), "base-new is authoritative")
-    finishCompaction()
-    tombstoneIntentMarker.delete() // any pending delete died with the deltas
-    intentMarker.delete() // the rebuilt base carries a fresh repo sub-index
+    swapInNewBase(live)
+    // any pending delete died with the deltas, and the rebuilt base carries
+    // a fresh repo sub-index
+    Seq(tombstoneIntentMarker, intentMarker).foreach(FsUtil.rmTree)
   }
 
   /** Size-tiered delta MERGE — the LSM-style maintenance step between full
@@ -567,13 +546,12 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     val n = deltaCount()
     if (n < 2) return
     val gens = (1 to n).map(deltaPath)
-    rmDir(mergedPath)
+    FsUtil.rmTree(mergedPath)
     // docs and lineage: plain unions — ids preserved
     mergeStage("docs") {
       spark.read.parquet(gens.map(g => s"$g/docs"): _*)
         .write.parquet(s"$mergedPath/docs")
-      val linDirs = gens.map(g => s"$g/lineage")
-        .filter(p => new java.io.File(p).exists())
+      val linDirs = gens.map(g => s"$g/lineage").filter(FsUtil.exists)
       if (linDirs.nonEmpty)
         spark.read.parquet(linDirs: _*).write.parquet(s"$mergedPath/lineage")
     }
@@ -614,13 +592,11 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
       val t = parts.map(_.totalTokens).sum
       Seq(IndexStats(nn, t, if (nn == 0) 0.0 else t.toDouble / nn, bucketSize))
         .toDS().coalesce(1).write.parquet(s"$mergedPath/stats")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$mergedPath/FORMAT"),
-        IndexBuilder.FormatVersion)
+      IndexBuilder.writeFormat(mergedPath)
     }
     // COMMIT POINT: once the marker exists the merged delta is
     // authoritative; generations() finishes the swap before answering
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(mergeMarker),
+    FsUtil.writeMarker(mergeMarker,
       "delta-merged is authoritative for every delta-N")
     if (!crashBeforeSwap) mergeStage("swap") { finishMerge() }
   }
@@ -637,19 +613,14 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     * steps is safe.
     */
   private def finishMerge(): Unit = {
-    if (!new java.io.File(mergeMarker).exists()) return
-    if (new java.io.File(s"$mergedPath/docs/_SUCCESS").exists()) {
-      val re = "^delta-(\\d+)$".r
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .foreach(f => f.getName match {
-          case re(_) => rmDir(f.getPath)
-          case _ =>
-        })
-      graft.util.FsUtil.renameOrThrow(mergedPath, deltaPath(1))
+    if (!FsUtil.exists(mergeMarker)) return
+    if (isCommitted(s"$mergedPath/docs")) {
+      versions("delta").foreach(g => FsUtil.rmTree(deltaPath(g)))
+      FsUtil.renameOrThrow(mergedPath, deltaPath(1))
     }
     // marker without a complete merged dir: the rename already happened on
     // a previous attempt — only the marker is left to clear
-    new java.io.File(mergeMarker).delete()
+    FsUtil.rmTree(mergeMarker)
   }
 
   private def newBasePath = s"$root/base-new"
@@ -661,17 +632,17 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     * exists, so a crash between any two steps just re-runs the rest.
     */
   private def finishCompaction(): Unit = {
-    if (!new java.io.File(compactMarker).exists()) return
-    if (new java.io.File(s"$newBasePath/docs/_SUCCESS").exists()) {
-      (1 to deltaCount()).foreach(g => rmDir(deltaPath(g)))
-      tombstoneVersions().foreach(v => rmDir(tombstoneDir(v)))
-      repoIndexVersions().foreach(v => rmDir(s"$root/repoIndex-$v"))
-      rmDir(basePath)
-      graft.util.FsUtil.renameOrThrow(newBasePath, basePath)
+    if (!FsUtil.exists(compactMarker)) return
+    if (isCommitted(s"$newBasePath/docs")) {
+      (1 to deltaCount()).foreach(g => FsUtil.rmTree(deltaPath(g)))
+      tombstoneVersions().foreach(v => FsUtil.rmTree(tombstoneDir(v)))
+      repoIndexVersions().foreach(v => FsUtil.rmTree(s"$root/repoIndex-$v"))
+      FsUtil.rmTree(basePath)
+      FsUtil.renameOrThrow(newBasePath, basePath)
     }
     // marker without a complete base-new: the rename already happened on a
     // previous attempt (or the build never committed and the old state is
     // still fully intact) — either way only the marker is left to clear
-    new java.io.File(compactMarker).delete()
+    FsUtil.rmTree(compactMarker)
   }
 }

@@ -7,6 +7,8 @@ import org.apache.spark.util.CollectionAccumulator
 
 import graft.score.{Bm25, SmallFloat}
 import graft.tokenize.CodeTokenizer
+import graft.util.FsUtil
+import graft.util.FsUtil.isCommitted
 
 /** Input corpus row (BASELINE.json.input_hint shape + sha). */
 case class CorpusRow(repo: String, path: String, commit: String,
@@ -90,9 +92,6 @@ class IndexBuilder(
   def statsPath = s"$indexRoot/stats"
   def lineagePath = s"$indexRoot/lineage"
 
-  private def done(path: String): Boolean =
-    new java.io.File(s"$path/_SUCCESS").exists()
-
   /** Deterministic 1-based docId = global rank of the document key
     * docKey = sha256(repo ∥ '\0' ∥ path ∥ '\0' ∥ commit), ascending.
     *
@@ -172,7 +171,7 @@ class IndexBuilder(
     */
   def buildDocs(corpus: DataFrame): Unit = {
     ensureFormat()
-    if (done(docsPath) && done(statsPath)) return
+    if (isCommitted(docsPath) && isCommitted(statsPath)) return
     ProgressReporter.inStage(spark, "docs") { buildDocsBody(corpus) }
   }
 
@@ -234,7 +233,7 @@ class IndexBuilder(
     */
   def buildPostings(): Unit = {
     ensureFormat()
-    if (done(postingsPath)) return
+    if (isCommitted(postingsPath)) return
     ProgressReporter.inStage(spark, "postings") { buildPostingsBody() }
   }
 
@@ -248,14 +247,9 @@ class IndexBuilder(
     // while 2-core stayed flat. Each docs file is a single row group, so
     // file-granularity splits are always achievable; at production sizes
     // docsBytes/P ≥ the 128 MB default and this is a no-op.
-    val docsBytes = Option(new java.io.File(docsPath).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(_.length()).sum
-    // an unreadable/non-local docsPath lists as 0 bytes — leave the conf
-    // alone rather than pinning to the floor and shredding a production
-    // scan into 1 MB splits (round-3 review)
-    if (docsBytes <= 0) { buildPostingsPhases(spark); return }
+    val docsBytes = FsUtil.list(docsPath)
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .map(_.getLen).sum
     val splitTarget = math.max(1L << 20, docsBytes / math.max(1, P))
     // the pin lives on a CHILD session (shared context, isolated SQLConf):
     // mutating the shared session's conf would leak the small split sizes
@@ -350,7 +344,7 @@ class IndexBuilder(
     */
   def buildDict(): Unit = {
     ensureFormat()
-    if (done(dictPath)) return
+    if (isCommitted(dictPath)) return
     ProgressReporter.inStage(spark, "dict") {
     spark.read.parquet(postingsPath)
       .groupBy($"term")
@@ -389,7 +383,7 @@ class IndexBuilder(
     * distributed pipeline as the main index — nothing driver-side.
     */
   def buildRepoIndex(): Unit = {
-    if (done(s"$indexRoot/repoIndex/dict")) return
+    if (isCommitted(s"$indexRoot/repoIndex/dict")) return
     IndexBuilder.buildRepoIndexAt(spark,
       spark.read.parquet(docsPath).select($"repo"),
       s"$indexRoot/repoIndex", bucketSize, includeTrigrams, numPartitions)
@@ -400,15 +394,11 @@ class IndexBuilder(
     * stale layout.
     */
   private def ensureFormat(): Unit = {
-    val fmt = new java.io.File(s"$indexRoot/FORMAT")
-    val stale =
-      (fmt.exists() && java.nio.file.Files.readString(fmt.toPath).trim !=
-        IndexBuilder.FormatVersion) ||
-      (!fmt.exists() && done(docsPath)) // pre-versioning artifacts
-    if (stale) graft.util.FsUtil.rmTree(indexRoot)
-    new java.io.File(indexRoot).mkdirs()
-    if (!fmt.exists())
-      java.nio.file.Files.writeString(fmt.toPath, IndexBuilder.FormatVersion)
+    val found = formatOf(indexRoot)
+    // no FORMAT over a committed docs stage: pre-versioning artifacts
+    val stale = found.fold(isCommitted(docsPath))(_ != FormatVersion)
+    if (stale) FsUtil.rmTree(indexRoot)
+    if (stale || found.isEmpty) writeFormat(indexRoot)
   }
 
   // ----------------------------------------------------------------- lineage
@@ -438,6 +428,12 @@ object IndexBuilder {
     */
   val PathNsBit: Long = 1L << 62
 
+  /** The layout-version marker every index root carries. */
+  def formatOf(root: String): Option[String] =
+    FsUtil.readMarker(s"$root/FORMAT")
+  def writeFormat(root: String): Unit =
+    FsUtil.writeMarker(s"$root/FORMAT", FormatVersion)
+
   /** READ-time layout gate (round-3 ADVICE): ensureFormat only guards
     * build resume — a persisted older-format root (or a version-less dir)
     * would otherwise OPEN silently, and query paths that assume this
@@ -446,10 +442,7 @@ object IndexBuilder {
     * this and fail fast instead.
     */
   def requireFormat(root: String): Unit = {
-    val fmt = new java.io.File(s"$root/FORMAT")
-    val found =
-      if (fmt.exists()) java.nio.file.Files.readString(fmt.toPath).trim
-      else "<missing>"
+    val found = formatOf(root).getOrElse("<missing>")
     if (found != FormatVersion)
       throw new IllegalStateException(
         s"index at $root has layout '$found' but this engine expects " +

@@ -50,12 +50,8 @@ class MultiSearcher(spark0: SparkSession, generations: Seq[String],
   // v8-base + v9-delta root must refuse to open, not half-work
   generations.foreach(IndexBuilder.requireFormat)
 
-  override lazy val repoIndex: Option[Searcher] =
-    repoIndexPath.map(new Searcher(spark0, _)).orElse(
-      if (new java.io.File(
-          s"${generations.head}/repoIndex/dict/_SUCCESS").exists())
-        Some(new Searcher(spark0, s"${generations.head}/repoIndex"))
-      else None)
+  override protected def repoIndexRoot: Option[String] =
+    repoIndexPath.orElse(super.repoIndexRoot)
 
   @transient private lazy val shippedTombstones: Option[Array[Long]] = {
     val c = tombstones.limit((TombstoneShipMax + 1).toInt).count()

@@ -22,28 +22,11 @@ object Dedup {
   def seedA(i: Int): Long = 2L * i + 1
   def seedB(i: Int): Long = 1000003L * i + 12345
 
-  /** MinHash signatures: for each doc and seed i,
-    * min over distinct words w of (A_i·charHash(w) + B_i) mod P.
-    * Output long format: (doc_id, seed, minhash).
-    */
-  def minhash(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val seeds = (0 until NumHashes).map(i => (i, seedA(i), seedB(i)))
-      .toDF("seed", "a", "b")
-    documents
-      .select(col("doc_id"),
-        explode(array_distinct(words(col("text")))).as("w"))
-      .withColumn("wh", charHash(col("w")))
-      .crossJoin(broadcast(seeds))
-      .groupBy("doc_id", "seed")
-      .agg(min((col("a") * col("wh") + col("b")) % HashP).as("minhash"))
-  }
-
-  /** LSH banding: group the signature into Bands bands of 3 rows each;
-    * band signature = comma-joined minhashes in seed order. Docs sharing a
-    * (band, sig) bucket are near-dup candidates — the bucket-join replaces
-    * the quadratic all-pairs compare at scale.
+  /** MinHash + LSH banding. Minhash i of a doc = min over its distinct
+    * words w of (A_i·charHash(w) + B_i) mod P; the NumHashes minhashes form
+    * Bands bands of 3, band signature = the comma-joined minhashes in seed
+    * order. Docs sharing a (band, sig) bucket are near-dup candidates — the
+    * bucket-join replaces the quadratic all-pairs compare at scale.
     *
     * Shape (r6 optimization, guide §2.3 "aggregate before you shuffle" /
     * §2.4 "remove shuffles outright"): ONE hash aggregate computes all

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.FsUtil
+
 /** Similarity search over an embedding column (`embeddings(vec_id,
   * embedding ARRAY<FLOAT>, label)`).
   *
@@ -415,14 +417,11 @@ object Similarity {
     val nl = if (nlist == Auto) defaultNlist(fp.getLong(0)) else nlist
     val spec = s"graft-ivf-v2 nlist=$nl iters=$lloydIters init=hash " +
       s"data=${fp.getLong(0)}/${fp.getLong(1)}/${fp.getLong(2)}"
-    val marker = new java.io.File(s"$dir/SPEC")
-    val fresh = marker.exists() &&
-      java.nio.file.Files.readString(marker.toPath).trim == spec
-    if (fresh && new java.io.File(s"$dir/cells/_SUCCESS").exists() &&
-        new java.io.File(s"$dir/centroids/_SUCCESS").exists()) return
-    graft.util.FsUtil.rmTree(dir)
-    new java.io.File(dir).mkdirs()
-    java.nio.file.Files.writeString(marker.toPath, spec)
+    if (FsUtil.readMarker(s"$dir/SPEC").contains(spec) &&
+        FsUtil.isCommitted(s"$dir/cells") &&
+        FsUtil.isCommitted(s"$dir/centroids")) return
+    FsUtil.rmTree(dir)
+    FsUtil.writeMarker(s"$dir/SPEC", spec)
     val spark = embeddings.sparkSession
     val cents = ivfCentroids(embeddings, nl, lloydIters)
     cents.write.mode("overwrite").parquet(s"$dir/centroids")

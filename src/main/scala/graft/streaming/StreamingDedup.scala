@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.pipeline.Dedup
+import graft.util.FsUtil
 
 /** Streaming near-dedup of an unbounded document stream: a document is
   * kept iff none of its MinHash band buckets was occupied by ANY earlier
@@ -42,26 +43,12 @@ class StreamingDedup(spark: SparkSession, stateDir: String) {
     * lexicographic name order would misorder gen-10 vs gen-2.
     */
   private[graft] def gens(batchId: Long): Seq[String] = {
-    // Hadoop FileSystem listing, not java.io.File (round-5 ADVICE): on a
-    // DFS/object-store stateDir a java.io listing silently sees ZERO
-    // generations and the stream dedups nothing across batches — the
-    // FileSystem API resolves whatever scheme the path carries, so the
-    // local-parquet demonstration and a production root share one code
-    // path.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(hconf)
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq
-      .flatMap { st =>
-        val name = st.getPath.getName
-        val id = if (name.startsWith("gen-")) name.drop(4).toLongOption
-                 else None
-        id.filter(_ < batchId && st.isDirectory &&
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-          .map(_ -> st.getPath.toString)
-      }
-      .sortBy(_._1).map(_._2)
+    // through FsUtil, so a DFS or object-store stateDir lists too
+    val Gen = "gen-(\\d+)".r
+    FsUtil.list(stateDir).map(_.getPath.getName)
+      .collect { case n @ Gen(id) if id.toLongOption.exists(_ < batchId) =>
+        id.toLong -> s"$stateDir/$n" }
+      .filter(g => FsUtil.isCommitted(g._2)).sortBy(_._1).map(_._2)
   }
 
   private def readSeen(batchId: Long): DataFrame = {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.CorpusGen
-import graft.engine.Searcher
+import graft.engine.{QueryExecutor, Searcher}
 import graft.index.IndexBuilder
 import graft.oracle.OracleEngine
 
@@ -221,29 +221,41 @@ class EngineSpec extends AnyFunSuite {
       .execute("path:mod1", 10).count() == 1)
   }
 
-  test("resume after simulated failure reproduces identical artifacts") {
-    val root = TestSpark.tempDir("engine-resume")
-    val b = new IndexBuilder(spark, root, bucketSize = 64, numPartitions = 4)
-    b.buildDocs(corpus)
-    // simulate a crash mid-postings: stage output absent → resume rebuilds
-    b.build(corpus)
-    val s = new Searcher(spark, root)
-    for (q <- Seq("if", "ParseError")) {
-      assert(hits(s.searchLiteral(q, 20)) == hits(searcher.searchLiteral(q, 20)))
+  for (form <- TestSpark.RootForms)
+    test("resume after simulated failure reproduces identical artifacts" +
+         form.label) {
+      val dir = TestSpark.tempDir(s"engine-resume${form.tag}")
+      val root = form.of(dir)
+      val b = new IndexBuilder(spark, root, bucketSize = 64, numPartitions = 4)
+      b.buildDocs(corpus)
+      // simulate a crash mid-postings: stage output absent → resume rebuilds
+      b.build(corpus)
+      val s = new Searcher(spark, root)
+      for (q <- Seq("if", "ParseError")) {
+        assert(hits(s.searchLiteral(q, 20)) == hits(searcher.searchLiteral(q, 20)))
+      }
+      // now corrupt (delete) the dict and resume: only dict rebuilds. The
+      // markers are checked at the bare dir: that is where they must land.
+      graft.util.FsUtil.rmTree(s"$root/dict")
+      val docsMtime = new java.io.File(s"$dir/docs/_SUCCESS").lastModified()
+      b.build(corpus)
+      assert(new java.io.File(s"$dir/dict/_SUCCESS").exists())
+      assert(new java.io.File(s"$dir/docs/_SUCCESS").lastModified() == docsMtime,
+        "docs stage must be skipped on resume")
+      assert(hits(new Searcher(spark, root).searchLiteral("if", 10)) ==
+        hits(searcher.searchLiteral("if", 10)))
+      assert(!new java.io.File("file:").exists(), "stray file: dir under the cwd")
     }
-    // now corrupt (delete) the dict and resume: only dict rebuilds
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(s"$root/dict"))
-    val docsMtime = new java.io.File(s"$root/docs/_SUCCESS").lastModified()
-    b.build(corpus)
-    assert(new java.io.File(s"$root/dict/_SUCCESS").exists())
-    assert(new java.io.File(s"$root/docs/_SUCCESS").lastModified() == docsMtime,
-      "docs stage must be skipped on resume")
-    assert(hits(new Searcher(spark, root).searchLiteral("if", 10)) ==
-      hits(searcher.searchLiteral("if", 10)))
+
+  test("an index built at a bare path opens through its file: URI, " +
+       "repo: search included") {
+    val s = new Searcher(spark, "file://" + indexRoot)
+    assert(s.repoIndex.isDefined)
+    val viaUri = new QueryExecutor(s).executeRepo("repo:repo1", 100).collect()
+    val viaBare = new QueryExecutor(searcher).executeRepo("repo:repo1", 100)
+      .collect()
+    assert(viaUri.nonEmpty && viaUri.toSeq == viaBare.toSeq)
+    assert(!new java.io.File("file:").exists(), "stray file: dir under the cwd")
   }
 
   test("lineage: per-partition metrics written for each heavy stage") {

@@ -322,35 +322,38 @@ class IncrementalSpec extends AnyFunSuite {
       assert(keyedHits(s, q) == keyedHits(full, q), s"query '$q'")
   }
 
-  test("crash after the compaction commit point: readers adopt and finish the swap") {
-    val root = TestSpark.tempDir("inc-compact-crash")
-    val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
-    inc.buildBase(corpusA)
-    inc.ingest(corpusB)
-    val repo = corpusA.select("repo").distinct().orderBy("repo")
-      .limit(1).collect()(0).getString(0)
-    inc.deleteRepo(repo)
-    // replay compact() up to (and including) the marker write, then "crash"
-    val live = spark.read.parquet(inc.generations().map(g => s"$g/docs"): _*)
-      .filter($"indexed")
-      .join(inc.readTombstones(), Seq("docId"), "left_anti")
-      .select($"repo", $"path", $"commit", $"lang", $"content",
-        $"contentSha", $"branch")
-    new IndexBuilder(spark, s"$root/base-new", bucketSize = 64).build(live)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/COMPACTING"), "x")
-    // reopen: the first read path must finish the swap before answering
-    val inc2 = new IncrementalIndexer(spark, root, bucketSize = 64)
-    assert(inc2.generations() == Seq(s"$root/base"))
-    assert(!new java.io.File(s"$root/COMPACTING").exists())
-    assert(!new java.io.File(s"$root/base-new").exists())
-    val s = inc2.searcher()
-    assert(s.docs.filter(col("repo") === repo).count() == 0)
-    val full = fullRebuild(Seq(corpusA.filter(col("repo") =!= repo),
-      corpusB), "compact-crash")
-    for (q <- Seq("if", "parse", "return index"))
-      assert(keyedHits(s, q) == keyedHits(full, q), s"query '$q'")
-  }
+  for (form <- TestSpark.RootForms)
+    test("crash after the compaction commit point: readers adopt and " +
+         "finish the swap" + form.label) {
+      val dir = TestSpark.tempDir(s"inc-compact-crash${form.tag}")
+      val root = form.of(dir)
+      val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
+      inc.buildBase(corpusA)
+      inc.ingest(corpusB)
+      val repo = corpusA.select("repo").distinct().orderBy("repo")
+        .limit(1).collect()(0).getString(0)
+      inc.deleteRepo(repo)
+      // replay compact() up to (and including) the marker write, then "crash"
+      val live = spark.read.parquet(inc.generations().map(g => s"$g/docs"): _*)
+        .filter($"indexed")
+        .join(inc.readTombstones(), Seq("docId"), "left_anti")
+        .select($"repo", $"path", $"commit", $"lang", $"content",
+          $"contentSha", $"branch")
+      new IndexBuilder(spark, s"$root/base-new", bucketSize = 64).build(live)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/COMPACTING"), "x")
+      // reopen: the first read path must finish the swap before answering
+      val inc2 = new IncrementalIndexer(spark, root, bucketSize = 64)
+      assert(inc2.generations() == Seq(s"$root/base"))
+      assert(!new java.io.File(s"$dir/COMPACTING").exists())
+      assert(!new java.io.File(s"$dir/base-new").exists())
+      val s = inc2.searcher()
+      assert(s.docs.filter(col("repo") === repo).count() == 0)
+      val full = fullRebuild(Seq(corpusA.filter(col("repo") =!= repo),
+        corpusB), "compact-crash")
+      for (q <- Seq("if", "parse", "return index"))
+        assert(keyedHits(s, q) == keyedHits(full, q), s"query '$q'")
+    }
 
   test("mergeDeltas: bit-identical results (docIds AND scores), one merged delta") {
     val root = TestSpark.tempDir("inc-merge")
@@ -400,30 +403,33 @@ class IncrementalSpec extends AnyFunSuite {
       .count() == 1)
   }
 
-  test("mergeDeltas crash windows: commit-point and mid-swap states both recover") {
-    val root = TestSpark.tempDir("inc-merge-crash")
-    val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
-    inc.buildBase(corpusA)
-    inc.ingest(corpusB)
-    inc.ingest(Seq(("c-repo", "c/path", "c1", "scala", "crashtokenqq here\n"))
-      .toDF("repo", "path", "commit", "lang", "content"))
-    val before = keyedHits(inc.searcher(), "if")
-    // crash exactly at the commit point (marker written, swap not run)
-    inc.mergeDeltas(crashBeforeSwap = true)
-    assert(new java.io.File(s"$root/MERGING").exists())
-    // ...and then again mid-swap: delta-1 already removed, delta-2+ not —
-    // the state that would orphan duplicates under contiguous counting
-    graft.util.FsUtil.rmTree(s"$root/delta-1")
-    val inc2 = new IncrementalIndexer(spark, root, bucketSize = 64)
-    assert(inc2.generations() == Seq(s"$root/base", s"$root/delta-1"))
-    assert(!new java.io.File(s"$root/MERGING").exists())
-    assert(!new java.io.File(s"$root/delta-merged").exists())
-    assert(!new java.io.File(s"$root/delta-2").exists())
-    assert(keyedHits(inc2.searcher(), "if") == before)
-    assert(inc2.searcher()
-      .search(Seq("crashtokenqq"), 10, conjunctive = true, useWand = false)
-      .count() == 1)
-  }
+  for (form <- TestSpark.RootForms)
+    test("mergeDeltas crash windows: commit-point and mid-swap states " +
+         "both recover" + form.label) {
+      val dir = TestSpark.tempDir(s"inc-merge-crash${form.tag}")
+      val root = form.of(dir)
+      val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
+      inc.buildBase(corpusA)
+      inc.ingest(corpusB)
+      inc.ingest(Seq(("c-repo", "c/path", "c1", "scala", "crashtokenqq here\n"))
+        .toDF("repo", "path", "commit", "lang", "content"))
+      val before = keyedHits(inc.searcher(), "if")
+      // crash exactly at the commit point (marker written, swap not run)
+      inc.mergeDeltas(crashBeforeSwap = true)
+      assert(new java.io.File(s"$dir/MERGING").exists())
+      // ...and then again mid-swap: delta-1 already removed, delta-2+ not —
+      // the state that would orphan duplicates under contiguous counting
+      graft.util.FsUtil.rmTree(s"$root/delta-1")
+      val inc2 = new IncrementalIndexer(spark, root, bucketSize = 64)
+      assert(inc2.generations() == Seq(s"$root/base", s"$root/delta-1"))
+      assert(!new java.io.File(s"$dir/MERGING").exists())
+      assert(!new java.io.File(s"$dir/delta-merged").exists())
+      assert(!new java.io.File(s"$dir/delta-2").exists())
+      assert(keyedHits(inc2.searcher(), "if") == before)
+      assert(inc2.searcher()
+        .search(Seq("crashtokenqq"), 10, conjunctive = true, useWand = false)
+        .count() == 1)
+    }
 
   test("crashed partial repo-index refresh cannot resume a stale name set") {
     val root = TestSpark.tempDir("inc-repoidx-crash")
@@ -444,6 +450,30 @@ class IncrementalSpec extends AnyFunSuite {
       .map(_.getString(0)).toSet ++
       corpusB.select("repo").distinct().collect().map(_.getString(0)).toSet
     assert(names == want, "stale docs stage must not survive the refresh")
+  }
+
+  test("read-only root: searcher() serves a clean root and refuses one " +
+       "with pending recovery instead of healing it") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.PosixFilePermissions.fromString
+    val root = TestSpark.tempDir("inc-readonly")
+    val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
+    inc.buildBase(corpusA)
+    val dir = Paths.get(root)
+    val rw = Files.getPosixFilePermissions(dir)
+    def readOnly[T](f: => T): T = {
+      Files.setPosixFilePermissions(dir, fromString("r-xr-xr-x"))
+      try f finally Files.setPosixFilePermissions(dir, rw)
+    }
+    // a 0555 dir is read-only under Hadoop's permission check even for
+    // root, which the kernel would let write
+    assert(readOnly(inc.searcher()).stats.n == corpusA.count())
+    Files.writeString(dir.resolve("REPO_REFRESH_INTENT"), "pending")
+    val e = intercept[IllegalStateException](readOnly(inc.searcher()))
+    assert(e.getMessage.contains("REPO_REFRESH_INTENT"))
+    assert(Files.exists(dir.resolve("REPO_REFRESH_INTENT")))
+    inc.searcher() // writable again: heals
+    assert(!Files.exists(dir.resolve("REPO_REFRESH_INTENT")))
   }
 
   test("read-time FORMAT gate: a stale-layout root refuses to open") {
@@ -497,48 +527,58 @@ class IncrementalSpec extends AnyFunSuite {
       "completed refresh must clear the intent marker")
   }
 
-  test("crash between delta commit and re-add tombstones: healIngest " +
-       "finishes the delete; documents are never lost (round-4 review)") {
-    // control: the same update ingested cleanly. Drop the synth corpus's
-    // precomputed contentSha — it describes the ORIGINAL content, and the
-    // freshness anti-join would otherwise see the update as unchanged
-    val updated = corpusA.withColumn("content",
-      concat(col("content"), lit(" updatedmarker"))).drop("contentSha")
-    val ctlRoot = TestSpark.tempDir("inc-crash-ctl")
-    val ctl = new IncrementalIndexer(spark, ctlRoot, bucketSize = 64)
+  // control for the crash test below: the same update ingested cleanly.
+  // Drop the synth corpus's precomputed contentSha — it describes the
+  // ORIGINAL content, and the freshness anti-join would otherwise see the
+  // update as unchanged
+  private lazy val updated = corpusA.withColumn("content",
+    concat(col("content"), lit(" updatedmarker"))).drop("contentSha")
+  private lazy val ctl = {
+    val ctl = new IncrementalIndexer(spark, TestSpark.tempDir("inc-crash-ctl"),
+      bucketSize = 64)
     ctl.buildBase(corpusA)
     ctl.ingest(updated)
-    // crash: delta committed, old versions NOT yet tombstoned
-    val root = TestSpark.tempDir("inc-crash-tomb")
-    val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
-    inc.buildBase(corpusA)
-    inc.ingest(updated, crashAfterDelta = true)
-    assert(new java.io.File(s"$root/TOMBSTONE_INTENT").exists())
-    // searcher() heals before serving: no duplicate (old+new) versions,
-    // results equal the clean-ingest control
-    val got = keyedHits(inc.searcher(), "updatedmarker")
-    val want = keyedHits(ctl.searcher(), "updatedmarker")
-    assert(got == want && got.nonEmpty)
-    assert(!new java.io.File(s"$root/TOMBSTONE_INTENT").exists())
-    // and the delete actually finished: the healed root carries tombstones
-    assert(inc.readTombstones().count() == corpusA.count())
+    ctl
   }
 
-  test("crashed PARTIAL delta (docs committed, no dict) is removed by the " +
-       "next mutation instead of breaking generation reads") {
-    val root = TestSpark.tempDir("inc-crash-partial")
-    val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
-    inc.buildBase(corpusA)
-    // simulate a build that died between the docs and postings stages
-    new IndexBuilder(spark, s"$root/delta-1", bucketSize = 64,
-      docIdOffset = 1000L, includeRepoIndex = false)
-      .buildDocs(corpusB)
-    // a reader would otherwise see delta-1 in generations() and fail on
-    // the missing postings; searcher() heals by dropping the partial
-    val ms = inc.searcher()
-    assert(ms.stats.n == corpusA.count())
-    assert(!new java.io.File(s"$root/delta-1").exists())
-  }
+  for (form <- TestSpark.RootForms)
+    test("crash between delta commit and re-add tombstones: healIngest " +
+         "finishes the delete; documents are never lost (round-4 review)" +
+         form.label) {
+      // crash: delta committed, old versions NOT yet tombstoned
+      val dir = TestSpark.tempDir(s"inc-crash-tomb${form.tag}")
+      val root = form.of(dir)
+      val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
+      inc.buildBase(corpusA)
+      inc.ingest(updated, crashAfterDelta = true)
+      assert(new java.io.File(s"$dir/TOMBSTONE_INTENT").exists())
+      // searcher() heals before serving: no duplicate (old+new) versions,
+      // results equal the clean-ingest control
+      val got = keyedHits(inc.searcher(), "updatedmarker")
+      val want = keyedHits(ctl.searcher(), "updatedmarker")
+      assert(got == want && got.nonEmpty)
+      assert(!new java.io.File(s"$dir/TOMBSTONE_INTENT").exists())
+      // and the delete actually finished: the healed root carries tombstones
+      assert(inc.readTombstones().count() == corpusA.count())
+    }
+
+  for (form <- TestSpark.RootForms)
+    test("crashed PARTIAL delta (docs committed, no dict) is removed by the " +
+         "next mutation instead of breaking generation reads" + form.label) {
+      val dir = TestSpark.tempDir(s"inc-crash-partial${form.tag}")
+      val root = form.of(dir)
+      val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
+      inc.buildBase(corpusA)
+      // simulate a build that died between the docs and postings stages
+      new IndexBuilder(spark, s"$root/delta-1", bucketSize = 64,
+        docIdOffset = 1000L, includeRepoIndex = false)
+        .buildDocs(corpusB)
+      // a reader would otherwise see delta-1 in generations() and fail on
+      // the missing postings; searcher() heals by dropping the partial
+      val ms = inc.searcher()
+      assert(ms.stats.n == corpusA.count())
+      assert(!new java.io.File(s"$dir/delta-1").exists())
+    }
 
   test("migrate() upgrades a stale-format root in place from stored fields") {
     val root = TestSpark.tempDir("inc-migrate")
@@ -594,27 +634,30 @@ class IncrementalSpec extends AnyFunSuite {
     assert(inc.searcher().stats.n == corpusA.count())
   }
 
-  test("searcher() heals a surviving repo-refresh intent: repo names " +
-       "served after a crashed mutation come from liveDocs (round-4 ADVICE)") {
-    val root = TestSpark.tempDir("inc-searcher-intent")
-    val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
-    inc.buildBase(corpusA)
-    val aRepos = corpusA.select("repo").distinct().collect()
-      .map(_.getString(0)).toSet
-    // a wrong increment stands in for the stale name set a crashed
-    // mutation leaves behind
-    inc.refreshRepoIndex(added = Some(Seq("ghost/zzz").toDF("repo")))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/REPO_REFRESH_INTENT"), "pending")
-    val ms = inc.searcher()
-    val served = spark.read.parquet(s"${inc.repoIndexPath.get}/docs")
-      .select("repo").collect().map(_.getString(0)).toSet
-    assert(served == aRepos,
-      "searcher() must bootstrap the repo index from liveDocs, not serve " +
-        "the stale set until the next mutation")
-    assert(!new java.io.File(s"$root/REPO_REFRESH_INTENT").exists())
-    assert(ms.stats.n == corpusA.count())
-  }
+  for (form <- TestSpark.RootForms)
+    test("searcher() heals a surviving repo-refresh intent: repo names " +
+         "served after a crashed mutation come from liveDocs (round-4 ADVICE)" +
+         form.label) {
+      val dir = TestSpark.tempDir(s"inc-searcher-intent${form.tag}")
+      val root = form.of(dir)
+      val inc = new IncrementalIndexer(spark, root, bucketSize = 64)
+      inc.buildBase(corpusA)
+      val aRepos = corpusA.select("repo").distinct().collect()
+        .map(_.getString(0)).toSet
+      // a wrong increment stands in for the stale name set a crashed
+      // mutation leaves behind
+      inc.refreshRepoIndex(added = Some(Seq("ghost/zzz").toDF("repo")))
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/REPO_REFRESH_INTENT"), "pending")
+      val ms = inc.searcher()
+      val served = spark.read.parquet(s"${inc.repoIndexPath.get}/docs")
+        .select("repo").collect().map(_.getString(0)).toSet
+      assert(served == aRepos,
+        "searcher() must bootstrap the repo index from liveDocs, not serve " +
+          "the stale set until the next mutation")
+      assert(!new java.io.File(s"$dir/REPO_REFRESH_INTENT").exists())
+      assert(ms.stats.n == corpusA.count())
+    }
 
   test("structured streaming ingest drains arriving corpus files") {
     val root = TestSpark.tempDir("inc-stream")

@@ -18,15 +18,22 @@ object TestSpark {
   }
 
   def tempDir(name: String): String = {
-    val d = new java.io.File(s"target/testidx/$name")
-    if (d.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(d)
-    }
-    d.mkdirs()
-    d.getAbsolutePath
+    val d = new java.io.File(s"target/testidx/$name").getAbsolutePath
+    graft.util.FsUtil.rmTree(d)
+    new java.io.File(d).mkdirs()
+    d
   }
+
+  /** One spelling of a local index root: `label` suffixes the test name,
+    * `tag` the temp dir name, `of` maps the bare dir to the root string.
+    */
+  case class RootForm(label: String, tag: String, of: String => String)
+
+  /** Commit-protocol tests run over both spellings of the same directory:
+    * the bare path (label "", so the test keeps its name) and its `file:`
+    * URI.
+    */
+  val RootForms: Seq[RootForm] = Seq(
+    RootForm("", "", identity),
+    RootForm(" (file: URI root)", "-uri", d => "file://" + d))
 }
