@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, length, sum}
 
 import graft.engine.Searcher
 import graft.index.IndexBuilder
 import graft.pipeline.{Dedup, Similarity}
+import graft.util.LocalSpark
 
 /** Per-round benchmark (driver contract): one JSON line with total seconds
   * and a per-operator breakdown, on SPARK_GRAFT_SF_DIR at
@@ -34,14 +34,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.session("graft-bench", cpus)
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
 

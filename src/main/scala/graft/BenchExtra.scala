@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Dedup, Similarity, TextOps}
+import graft.util.LocalSpark
 
 /** Optimization-round profiling harness (guide §1.1/§1.4/§1.5) — NOT part
   * of the frozen driver bench. Times individual pipeline stages with the
@@ -26,22 +27,23 @@ object BenchExtra {
     val keys = if (args.nonEmpty) args.toSet else Set.empty[String]
     def want(k: String): Boolean = keys.isEmpty || keys.contains(k)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-bench-extra")
 
     val stages = scala.collection.mutable.ArrayBuffer.empty[StageRow]
-    var curDesc = ""
     spark.sparkContext.addSparkListener(new SparkListener {
+      // a stage's key is the job description `timed` set before its job
+      // was submitted, read from the stage's own properties; only the
+      // listener thread touches this map
+      private val descOf = scala.collection.mutable.Map.empty[Int, String]
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(d => descOf(e.stageInfo.stageId) = d)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val m = e.stageInfo.taskMetrics
+        val desc = descOf.remove(e.stageInfo.stageId).getOrElse("")
         stages.synchronized {
-          stages += StageRow(curDesc, e.stageInfo.stageId,
+          stages += StageRow(desc, e.stageInfo.stageId,
             e.stageInfo.name.takeWhile(_ != '\n').take(60),
             e.stageInfo.numTasks, m.executorRunTime, m.executorCpuTime / 1000000,
             m.jvmGCTime,
@@ -61,7 +63,6 @@ object BenchExtra {
     // computation, not the host)
     val repeats = sys.env.getOrElse("EXTRA_REPEATS", "1").toInt
     def timed(key: String)(f: => Any): Unit = if (want(key)) {
-      curDesc = key
       spark.sparkContext.setJobDescription(key)
       val ts = (1 to repeats).map { _ =>
         val t0 = System.nanoTime()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.corpus.CorpusGen
 import graft.index.IndexBuilder
+import graft.util.LocalSpark
 
 /** N-vs-4N scaling evidence (BASELINE.json north_rule; sandbox stand-in per
   * driver instruction): the SAME index build at local[N] and local[4N] over
@@ -305,24 +306,16 @@ object ScalingBench {
 
   private def session(cores: Int, name: String,
                       extra: Map[String, String] = Map.empty): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => b.config(k, v) }
     // shuffle scratch on tmpfs when available: spill I/O is the one part
     // of the build that cores cannot parallelize (cluster analog: NVMe
     // shuffle volumes)
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      new java.io.File("/dev/shm/spark-local").mkdirs()
-      b.config("spark.local.dir", "/dev/shm/spark-local")
-    }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    val localDir =
+      if (shm.isDirectory && shm.canWrite) {
+        new java.io.File("/dev/shm/spark-local").mkdirs()
+        Map("spark.local.dir" -> "/dev/shm/spark-local")
+      } else Map.empty[String, String]
+    LocalSpark.session(name, cores, extra ++ localDir)
   }
 
   def main(args: Array[String]): Unit = args.toList match {

@@ -169,11 +169,6 @@ class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
       }
   }
 
-  def exhaustiveTopK(terms: Seq[String], weights: Map[String, Float],
-                     k: Int, conjunctive: Boolean): Dataset[Hit] =
-    scoreAll(terms, weights, conjunctive)
-      .orderBy($"score".desc, $"docId".asc).limit(k)
-
   /** Tombstoned docIds, sorted, when small enough to ship to executors
     * (and to the driver-local path); None when the set is too large to
     * ship (MultiSearcher's cogroup path). MultiSearcher overrides with its

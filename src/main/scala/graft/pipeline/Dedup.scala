@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection for training-data pipelines: MinHash+LSH,
@@ -128,6 +129,14 @@ object Dedup {
     * a 50-deep lineage. Deterministic: min labels are order-free.
     * Singleton docs (no candidate pair) are not emitted — they are their
     * own cluster by definition.
+    *
+    * Ownership: building the frame runs the rounds' jobs (the local
+    * checkpoints are eager). Each round releases the intermediates it no
+    * longer needs — its `hop` and the previous labels — once the next
+    * labels are materialized and counted, and the edge list is released
+    * after the loop. One local checkpoint stays: the one behind the
+    * returned frame, which Spark's ContextCleaner frees once the caller
+    * drops that frame. The caller's `pairs` is never released.
     */
   def duplicateClusters(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     val edges = pairs
@@ -165,78 +174,28 @@ object Dedup {
             .as("cluster_id"))
         .localCheckpoint()
       changed = next.filter(col("cluster_id") =!= col("old")).count()
+      // `next` no longer reads either: its checkpoint cut the lineage
+      releaseCheckpoint(hop)
+      releaseCheckpoint(labels)
       labels = next.select("doc_id", "cluster_id")
       iter += 1
     }
+    releaseCheckpoint(edges)
     labels
   }
 
-  /** Connected components by ALTERNATING large-star / small-star rounds
-    * (the MapReduce CC alternating algorithm, Kiveris et al. 2014) — the
-    * adversarial-graph variant of duplicateClusters: min-label propagation
-    * carries the full edge list through every round and needs rounds
-    * proportional to log(diameter) WITH the pointer jump, while star
-    * rounds monotonically rewire edges toward each component's minimum
-    * and converge in O(log n) rounds on ANY graph shape, including the
-    * long chains that near-dup graphs degrade to under transitive
-    * boilerplate overlap. Same output contract as duplicateClusters
-    * (doc_id → component-min cluster_id; every node of the input edge
-    * set emitted, singletons absent by definition).
-    *
-    *   large-star: every node points its LARGER neighbors at the minimum
-    *               of its closed neighborhood;
-    *   small-star: every node rewires its smaller-or-equal neighbors
-    *               (and itself) to that minimum.
-    *
-    * Each round is two grouped aggregations + joins — one shuffle family,
-    * no driver data; localCheckpoint truncates lineage per round.
+  /** Unpersist the local checkpoints a frame reads: the RDD of each
+    * `LogicalRDD` in its plan. Only for frames built over checkpoints this
+    * object took itself, never over a caller's input. `Dataset.unpersist()`
+    * goes through the SQL cache manager, which does not hold local
+    * checkpoints, so their RDD would stay registered until a driver GC lets
+    * the ContextCleaner drop it.
     */
-  def duplicateClustersStars(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val allNodes = pairs
-      .select(col("doc_id_a").as("doc_id"))
-      .union(pairs.select(col("doc_id_b").as("doc_id")))
-      .distinct()
-      .localCheckpoint()
-    def closedMin(e: DataFrame): DataFrame =
-      e.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-    // large-star reads the SYMMETRIC neighborhood (an edge participates
-    // from both endpoints) and emits directed larger→smaller edges;
-    // small-star then rewires each node's ≤-neighbors (and itself) to its
-    // closed-neighborhood minimum. Both preserve connectivity.
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = closedMin(sym)
-      sym.join(m, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
     }
-    def smallStar(e: DataFrame): DataFrame = {
-      val m = closedMin(e)
-      e.join(m, "u").filter(col("v") <= col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(m.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-    var edges = pairs.select(col("doc_id_a").as("u"), col("doc_id_b").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      changed = next.join(edges, Seq("u", "v"), "left_anti").limit(1).count() +
-        edges.join(next, Seq("u", "v"), "left_anti").limit(1).count()
-      edges = next
-      iter += 1
-    }
-    // converged edge set = rooted stars (node → component min); roots map
-    // to themselves
-    allNodes
-      .join(edges.select(col("u").as("doc_id"), col("v")), Seq("doc_id"), "left")
-      .groupBy("doc_id")
-      .agg(min(coalesce(col("v"), col("doc_id"))).as("cluster_id"))
-  }
 
   /** Near-dup pairs at scale: LSH candidates verified by EXACT word-set
     * Jaccard — the production composition of minhashCandidates (bucketed,
@@ -387,9 +346,8 @@ object Dedup {
     * document except non-representative cluster members (the cluster's
     * min-id doc stands for the whole cluster; singletons never enter the
     * cluster table and survive by absence). This is the terminal stage of
-    * the dedup family: clusters (from duplicateClusters /
-    * duplicateClustersStars) → one anti-join on doc_id → the training
-    * corpus. The anti-join hashes on doc_id only (the drop-list is
+    * the dedup family: clusters (from duplicateClusters) → one anti-join
+    * on doc_id → the training corpus. The anti-join hashes on doc_id only (the drop-list is
     * cluster-members-minus-representatives, far smaller than the corpus)
     * and nothing is ever driver-materialized — scales as one shuffle.
     * Returns the surviving rows with the input's full schema — callers

@@ -21,41 +21,66 @@ class EntrySpec extends AnyFunSuite {
       s"q_* queries without oracle: ${(qk diff ok).filterNot(_.startsWith("e_"))}")
   }
 
+  /** Connected components by driver union-find: node → component min. */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def clusters(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  // a 40-node chain (the long-diameter shape, several rounds), a 3-clique,
+  // an isolated pair and a 4-star
+  private val mixedGraph: Seq[(Long, Long)] =
+    (1L until 40L).map(i => (i, i + 1)) ++
+      Seq((100L, 101L), (100L, 102L), (101L, 102L), (200L, 201L),
+        (300L, 301L), (300L, 302L), (300L, 303L))
+
   test("duplicateClusters: connected components over candidate pairs") {
     import spark.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 7L))
-      .toDF("doc_id_a", "doc_id_b")
-    val got = graft.pipeline.Dedup.duplicateClusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val small = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 7L))
+    val got = clusters(graft.pipeline.Dedup.duplicateClusters(
+      small.toDF("doc_id_a", "doc_id_b")))
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
       10L -> 10L, 11L -> 10L))
     // a longer chain still converges to the global min label
-    val chain = (1L until 9L).map(i => (i, i + 1)).toDF("doc_id_a", "doc_id_b")
-    val gotChain = graft.pipeline.Dedup.duplicateClusters(chain).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val chain = (1L until 9L).map(i => (i, i + 1))
+    val gotChain = clusters(graft.pipeline.Dedup.duplicateClusters(
+      chain.toDF("doc_id_a", "doc_id_b")))
     assert(gotChain == (1L to 9L).map(_ -> 1L).toMap)
-  }
-
-  test("duplicateClustersStars == duplicateClusters (alternating large/small-star)") {
-    import spark.implicits._
-    def clusters(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // adversarial long chain (the shape star rounds exist for) + a clique
-    // + an isolated pair + a star
-    val pairs = ((1L until 40L).map(i => (i, i + 1)) ++
-      Seq((100L, 101L), (100L, 102L), (101L, 102L), (200L, 201L),
-        (300L, 301L), (300L, 302L), (300L, 303L)))
-      .toDF("doc_id_a", "doc_id_b")
-    val want = clusters(graft.pipeline.Dedup.duplicateClusters(pairs))
-    val got = clusters(graft.pipeline.Dedup.duplicateClustersStars(pairs))
-    assert(got == want)
+    assert(clusters(graft.pipeline.Dedup.duplicateClusters(
+      mixedGraph.toDF("doc_id_a", "doc_id_b"))) == unionFind(mixedGraph))
     // and on real LSH star edges from a corpus with duplicates
     val docs = (1 to 40).map(i =>
       (i.toLong, s"shared boilerplate text block ${i % 5}"))
       .toDF("doc_id", "text")
     val edges = graft.pipeline.Dedup.minhashStarEdges(docs)
-    assert(clusters(graft.pipeline.Dedup.duplicateClustersStars(edges)) ==
-      clusters(graft.pipeline.Dedup.duplicateClusters(edges)))
+    val edgeList = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(edgeList.nonEmpty)
+    assert(clusters(graft.pipeline.Dedup.duplicateClusters(edges)) ==
+      unionFind(edgeList))
+  }
+
+  test("duplicateClusters releases its rounds: one persistent RDD per call") {
+    import spark.implicits._
+    val chain = (1L until 40L).map(i => (i, i + 1))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val got = graft.pipeline.Dedup.duplicateClusters(
+      chain.toDF("doc_id_a", "doc_id_b"))
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(added.size <= 1, s"persistent RDDs added by one call: $added")
+    // the one that stays backs the returned frame, which still reads
+    assert(clusters(got) == unionFind(chain))
   }
 
   test("jaccardVerifiedPairs: LSH candidates carry exact Jaccard, thresholded") {
