@@ -86,30 +86,36 @@ private[engine] final class LocalSearch(se: Searcher, local: LocalIndex,
   /** The first k ranked candidates whose content the regex finds in, in
     * at most two rank-ordered passes over docs: the best max(k,
     * VerifyChunk) candidates, then — only when fewer than k of them
-    * passed — all the others. A pass holds at most k rows: a row whose
-    * rank cannot enter the current best k is not even matched.
+    * passed — all the others. A pass folds each docs file to its own best
+    * k, at most k rows: a row whose rank cannot enter that file's best k
+    * so far is not even matched. The files' best k merge to the pass's.
     */
   private def verify(ranked: IndexedSeq[Hit], re: java.util.regex.Pattern,
                      k: Int): Seq[PageRow] = {
-    // max-heap on rank: the head is the worst of the best k so far
-    val best = mutable.PriorityQueue.empty[(Int, PageRow)](Ordering.by(_._1))
+    var best = Seq.empty[(Int, PageRow)]
     def pass(from: Int, until: Int): Unit = {
       val rank = (from until until).iterator.map(i => ranked(i).docId -> i).toMap
-      local.scanDocs(rank.keySet, content = true) { r =>
-        val i = rank(r.docId)
-        if ((best.size < k || i < best.head._1) && r.content != null &&
-            re.matcher(r.content).find()) {
-          best.enqueue(i -> r)
-          if (best.size > k) best.dequeue()
+      val files = local.foldDocs(rank.keySet, content = true) { rows =>
+        // max-heap on rank: the head is the worst of the best k so far
+        val top = mutable.PriorityQueue.empty[(Int, PageRow)](Ordering.by(_._1))
+        rows.foreach { r =>
+          val i = rank(r.docId)
+          if ((top.size < k || i < top.head._1) && r.content != null &&
+              re.matcher(r.content).find()) {
+            top.enqueue(i -> r)
+            if (top.size > k) top.dequeue()
+          }
         }
+        top.toSeq
       }
+      best = (best ++ files.flatten).sortBy(_._1).take(k)
     }
     val first = math.min(ranked.size, math.max(k, LocalSearch.VerifyChunk))
     pass(0, first)
     // the first pass holds the best-ranked candidates: once k of them
     // passed, no later candidate can enter the best k
     if (best.size < k) pass(first, ranked.size)
-    best.toSeq.sortBy(_._1).map { case (i, r) => r.copy(score = ranked(i).score) }
+    best.map { case (i, r) => r.copy(score = ranked(i).score) }
   }
 
   /** Grams of the fragment tree's literals (what fragmentDocs reads). */

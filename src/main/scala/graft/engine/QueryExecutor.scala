@@ -1,7 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.query.QueryParser
 import graft.query.QueryParser.{ContentTarget, FlatQuery, QLit, SymbolTarget}
@@ -135,9 +138,22 @@ object QueryExecutor {
     * 1): plain terms ran 1.6–4× faster locally up to df 23k and scoring
     * alone ran 1.7× slower at 47k; regexes ran up to 2× faster below 40k
     * when a candidate passed, 1.1× slower at 40k when none did (two full
-    * docs passes), and up to 2× slower above 58k.
+    * docs passes), and up to 2× slower above 58k. The crossover was
+    * measured before the index wrote small pages and the local path read
+    * its files in parallel, both of which made the local side cheaper.
     */
   private val LocalDfMax = 40000L
+
+  /** The local path's result schemas, derived once from the encoders the
+    * Spark path's frames use (hits, executeAny rows, snippet rows).
+    */
+  private val HitEncoder: Encoder[Hit] = Encoders.product[Hit]
+  private val FileHitCols = Seq("kind", "id", "name", "path", "score",
+    "highlights")
+  private val FileHitSchema: StructType = StructType(
+    Encoders.product[(String, Long, String, String, Float, Seq[(Int, Int)])]
+      .schema.fields.zip(FileHitCols).map { case (f, n) => f.copy(name = n) })
+  private val SnippetSchema: StructType = Encoders.product[SnippetRow].schema
 
   /** A file hit with its path highlight ranges (executeAny row). */
   private[engine] def fileHit(r: FileHitRow, pathPatterns: Seq[String])
@@ -197,9 +213,15 @@ class QueryExecutor(searcher: Searcher,
 
   def execute(input: String, k: Int): Dataset[Hit] =
     localRows(input, k, fields = false, content = false) match {
-      case Some(rows) => rows.map(r => Hit(r.docId, r.score)).toDS()
+      case Some(rows) =>
+        localFrame(rows.map(r => Row(r.docId, r.score)),
+          QueryExecutor.HitEncoder.schema).as(QueryExecutor.HitEncoder)
       case None => sparkTopK(input, k)
     }
+
+  /** A local path result: a LocalRelation of `rows`. */
+  private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
+    searcher.spark.createDataFrame(rows.asJava, schema)
 
   private def sparkTopK(input: String, k: Int): Dataset[Hit] =
     executeAllHits(input).orderBy($"score".desc, $"docId".asc).limit(k)
@@ -533,7 +555,9 @@ class QueryExecutor(searcher: Searcher,
     val specs = snippetSpecs(input)
     localRows(input, k, fields = true, content = true) match {
       case Some(rows) =>
-        rows.map(QueryExecutor.snippetRow(_, specs)).toDF()
+        localFrame(rows.map(r =>
+          Row.fromTuple(QueryExecutor.snippetRow(r, specs))),
+          QueryExecutor.SnippetSchema)
       case None =>
         searcher.docs
           .join(hitsSide(sparkTopK(input, k).toDF(), k), "docId")
@@ -698,12 +722,13 @@ class QueryExecutor(searcher: Searcher,
           .filter(l => l.isRegex || l.value.nonEmpty)
           .map(l => if (l.isRegex) l.value
                     else java.util.regex.Pattern.quote(l.value))
-        val cols = Seq("kind", "id", "name", "path", "score", "highlights")
         localRows(input, k, fields = true, content = false) match {
           case Some(rows) =>
-            rows.map(r => QueryExecutor.fileHit(
-              FileHitRow(r.docId, r.score, r.repo, r.path), pathPatterns))
-              .toDF(cols: _*)
+            localFrame(rows.map { r =>
+              val (kind, id, name, path, score, hls) = QueryExecutor.fileHit(
+                FileHitRow(r.docId, r.score, r.repo, r.path), pathPatterns)
+              Row(kind, id, name, path, score, hls.map(Row.fromTuple))
+            }, QueryExecutor.FileHitSchema)
           case None =>
             // docs side pruned to the ≤k winners via an explicit broadcast
             // of the page-sized hit set (mirrors executeWithSnippets;
@@ -715,7 +740,7 @@ class QueryExecutor(searcher: Searcher,
               .select($"docId", $"score", $"repo", $"path")
               .as[FileHitRow]
               .map(QueryExecutor.fileHit(_, pathPatterns))
-              .toDF(cols: _*)
+              .toDF(QueryExecutor.FileHitCols: _*)
               .orderBy($"score".desc, $"id".asc)
         }
       case Some(ReaderKind.Repo) =>

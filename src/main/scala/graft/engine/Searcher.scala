@@ -33,15 +33,18 @@ case class Hit(docId: Long, score: Float)
   *     parquet reader, and the same per-bucket scoreBucket runs over them
   *     — no Spark job. Each read pushes an `In` filter on `term` /
   *     `docId` into the parquet reader, which skips the row groups and
-  *     pages whose min/max cannot hold a wanted key; postings and content
-  *     are never cached in the driver.
+  *     pages whose min/max cannot hold a wanted key, and reads the files
+  *     in parallel; postings and content are never cached in the driver.
   *
-  * Scale notes: the postings scan prunes on the `term` column (parquet
-  * min/max row-group stats — each postings file is sorted by term, but
-  * files are hash-partitioned on (term, bucket), so a file whose single
-  * row group spans every term prunes nothing), dict lookups collect only
-  * the ≤dozens of query-term rows to the driver, and the score
-  * aggregation shuffles only candidate postings, never the index.
+  * Scale notes: the postings scan prunes on the `term` column by page.
+  * Files are hash-partitioned on (term, bucket), so a file's row group
+  * spans every term and its min/max prunes nothing, but each file is
+  * sorted by term and written in small pages (IndexBuilder.PageOptions),
+  * so a reader with the `In` filter skips every page whose term range
+  * misses the query's terms (measured on the driver-local read). Dict
+  * lookups collect only the ≤dozens of query-term rows to the driver, and
+  * the score aggregation shuffles only candidate postings, never the
+  * index.
   */
 class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
   import spark.implicits._

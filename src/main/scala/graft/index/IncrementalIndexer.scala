@@ -550,7 +550,7 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     // docs and lineage: plain unions — ids preserved
     mergeStage("docs") {
       spark.read.parquet(gens.map(g => s"$g/docs"): _*)
-        .write.parquet(s"$mergedPath/docs")
+        .write.options(IndexBuilder.PageOptions).parquet(s"$mergedPath/docs")
       val linDirs = gens.map(g => s"$g/lineage").filter(FsUtil.exists)
       if (linDirs.nonEmpty)
         spark.read.parquet(linDirs: _*).write.parquet(s"$mergedPath/lineage")
@@ -566,7 +566,8 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
         }
         .sortWithinPartitions($"term") // keep the sorted-by-term write
         // property the row-group min/max pruning relies on (PlanSpec)
-        .write.parquet(s"$mergedPath/postings")
+        .write.options(IndexBuilder.PageOptions)
+        .parquet(s"$mergedPath/postings")
     }
     mergeStage("dict") {
       // per-term stats are sums/maxes over generation runs, and each

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.CorpusGen
@@ -51,6 +52,10 @@ class LocalPathSpec extends AnyFunSuite {
     plan.contains("LocalTableScan") && !plan.contains("FileScan")
   }
 
+  /** Names, types and nullability of a frame's columns. */
+  private def shape(df: Dataset[_]): Seq[(String, DataType, Boolean)] =
+    df.schema.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq
+
   // plain literals (one and two tokens), symbol, and regex targets: one
   // required gram (fragment narrowing), several, a fused two-word regex
   val targets = Seq("parse", "index", "read_token", "symbol:read",
@@ -74,6 +79,10 @@ class LocalPathSpec extends AnyFunSuite {
       assert(isLocal(page))
       assert(page.collect().toSeq ==
         viaSpark.executeWithSnippets(q, k).collect().toSeq)
+      // the local frames have the Spark frames' schemas
+      assert(shape(got) == shape(viaSpark.execute(q, k)))
+      assert(shape(any) == shape(viaSpark.executeAny(q, k)))
+      assert(shape(page) == shape(viaSpark.executeWithSnippets(q, k)))
     }
   }
 

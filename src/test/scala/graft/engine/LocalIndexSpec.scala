@@ -1,24 +1,86 @@
 package graft.engine
 
+import java.io.IOException
+import java.net.URI
+import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, FileSystem,
+  Path, RawLocalFileSystem}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.{col, concat, expr, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, PostingRun}
+import graft.index.{IncrementalIndexer, IndexBuilder, PostingRun}
+import graft.util.FsUtil
+
+/** A local file system under the `trackfs:` scheme that counts the bytes
+  * its input streams read (vectored reads included) and the streams it
+  * opens and closes, and fails to open the files named in `poisoned`.
+  */
+class TrackingFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("trackfs:///")
+  override def getScheme: String = "trackfs"
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (TrackingFs.poisoned.contains(f.getName))
+      throw new IOException(s"poisoned ${f.getName}")
+    val file = new java.io.RandomAccessFile(pathToFile(f), "r")
+    TrackingFs.opened.incrementAndGet()
+    val counted = new FSInputStream {
+      private var closed = false
+      override def seek(pos: Long): Unit = file.seek(pos)
+      override def getPos: Long = file.getFilePointer
+      override def seekToNewSource(pos: Long): Boolean = false
+      override def read(): Int = {
+        val b = file.read()
+        if (b >= 0) TrackingFs.bytesRead.incrementAndGet()
+        b
+      }
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val n = file.read(b, off, len)
+        if (n > 0) TrackingFs.bytesRead.addAndGet(n)
+        n
+      }
+      override def close(): Unit = synchronized {
+        if (!closed) { closed = true; TrackingFs.closed.incrementAndGet() }
+        file.close()
+      }
+    }
+    // unbuffered: the count is what the reader asks for, not read-ahead
+    new FSDataInputStream(counted)
+  }
+}
+
+object TrackingFs {
+  val bytesRead = new AtomicLong()
+  val opened = new AtomicInteger()
+  val closed = new AtomicInteger()
+  @volatile var poisoned = Set.empty[String]
+
+  /** The `trackfs:` spelling of a local path, with the scheme registered. */
+  def root(spark: org.apache.spark.sql.SparkSession, path: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.trackfs.impl", classOf[TrackingFs].getName)
+    s"trackfs://$path"
+  }
+}
 
 /** The driver-local read layer returns exactly the rows a Spark scan of
   * the same tables returns — for bare-path and `file:` URI roots, and for
   * files of many row groups, where parquet skips the row groups that
   * cannot hold a wanted key — and the local regex verify reads its
-  * candidates in rank order, stopping once k pass.
+  * candidates in rank order, stopping once k pass. The index writes
+  * small pages, so a one-term read decodes a small part of the postings;
+  * the per-file reads of a call run in parallel, concurrent callers get
+  * the sequential answers, and a failed file read reaches the caller with
+  * every reader closed.
   */
 class LocalIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -134,15 +196,131 @@ class LocalIndexSpec extends AnyFunSuite {
     } finally spark.conf.unset("parquet.hadoop.vectored.io.enabled")
   }
 
-  test("regex verify reads the best-ranked candidates first and stops once k pass") {
-    val asked = mutable.ArrayBuffer.empty[Int]
-    val li = new LocalIndex(spark, searcher.postings, searcher.docs) {
-      override def scanDocs(ids: collection.Set[Long], content: Boolean)
-                           (f: PageRow => Unit): Unit = {
+  /** The bytes a one-term postingRuns over the postings of the index at
+    * `root` reads, for a term of df 1, and the bytes of those files.
+    */
+  private def oneTermRead(root: String): (Long, Long) = {
+    val term = spark.read.parquet(s"$root/dict").filter(col("df") === 1)
+      .orderBy("term").select("term").head().getString(0)
+    val li = new LocalIndex(spark,
+      spark.read.parquet(s"${TrackingFs.root(spark, root)}/postings"),
+      searcher.docs)
+    val size = FsUtil.list(s"$root/postings")
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    val b0 = TrackingFs.bytesRead.get
+    assert(li.postingRuns(Seq(term)).map(_.term).toSeq == Seq(term))
+    (TrackingFs.bytesRead.get - b0, size)
+  }
+
+  test("a one-term postings read of a built index reads a small part of its bytes") {
+    val (read, size) = oneTermRead(searcher.indexRoot)
+    assert(read * 5 < size, s"one term read $read of $size postings bytes")
+  }
+
+  test("a one-term postings read of a mergeDeltas generation reads a small part of its bytes") {
+    val root = TestSpark.tempDir("localindex-merge")
+    val inc = new IncrementalIndexer(spark, root, bucketSize = 16)
+    inc.buildBase(CorpusGen.synth(spark, 2, 10, seed = 6L))
+    for (seed <- Seq(7L, 8L))
+      inc.ingest(CorpusGen.synth(spark, 4, 40, seed = seed)
+        .withColumn("repo", concat(lit(s"d$seed-"), col("repo"))))
+    inc.mergeDeltas()
+    assert(inc.generations().size == 2)
+    val (read, size) = oneTermRead(inc.deltaPath(1))
+    assert(read * 5 < size, s"one term read $read of $size postings bytes")
+  }
+
+  test("a per-file read that throws reaches the caller, with every reader closed") {
+    val root = TrackingFs.root(spark, searcher.indexRoot)
+    val li = new LocalIndex(spark, spark.read.parquet(s"$root/postings"),
+      spark.read.parquet(s"$root/docs"))
+    val want = li.postingRuns(terms).map(key).toSet
+    val ids = Set(1L, 7L, 30L, 59L, 60L)
+    val wantDocs = li.docRows(ids, content = true).keySet
+    assert(want.nonEmpty && wantDocs == ids)
+    assert(TrackingFs.opened.get > 0)
+    assert(TrackingFs.opened.get == TrackingFs.closed.get)
+    def names(table: String): Seq[String] =
+      FsUtil.list(s"${searcher.indexRoot}/$table").map(_.getPath.getName)
+        .filter(_.endsWith(".parquet")).sorted
+    def poisonedCause(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.isInstanceOf[IOException] &&
+          String.valueOf(c.getMessage).startsWith("poisoned"))
+    try {
+      for ((table, read) <- Seq[(String, () => Any)](
+          "postings" -> (() => li.postingRuns(terms)),
+          "docs" -> (() => li.docRows(ids, content = true)));
+          bad <- names(table)) {
+        assert(names(table).size > 1)
+        TrackingFs.poisoned = Set(bad)
+        val e = intercept[Throwable](read())
+        assert(poisonedCause(e), s"$table $bad: $e")
+        assert(TrackingFs.opened.get == TrackingFs.closed.get,
+          s"$table $bad: ${TrackingFs.opened.get} opened, " +
+            s"${TrackingFs.closed.get} closed")
+      }
+    } finally TrackingFs.poisoned = Set.empty
+    // the shared pool still serves reads
+    assert(li.postingRuns(terms).map(key).toSet == want)
+    assert(li.docRows(ids, content = true).keySet == wantDocs)
+    assert(TrackingFs.opened.get == TrackingFs.closed.get)
+  }
+
+  /** A LocalIndex over the spec's index that records the size of each
+    * docId set it is asked to read.
+    */
+  private def askingIndex(asked: mutable.Buffer[Int]): LocalIndex =
+    new LocalIndex(spark, searcher.postings, searcher.docs) {
+      override def foldDocs[A](ids: collection.Set[Long], content: Boolean)
+                              (perFile: Iterator[PageRow] => A): Seq[A] = {
         asked += ids.size
-        super.scanDocs(ids, content)(f)
+        super.foldDocs(ids, content)(perFile)
       }
     }
+
+  test("eight concurrent callers of one QueryExecutor each get the sequential answer") {
+    val qe = new QueryExecutor(searcher)
+    val twoPass = "/return [a-z]+Build/"
+    // fewer than k = 10 of its best VerifyChunk candidates pass, so the
+    // regex verify reads docs twice
+    val asked = mutable.ArrayBuffer.empty[Int]
+    val li = askingIndex(asked)
+    assert(new LocalSearch(searcher, li, Array.emptyLongArray, Long.MaxValue)
+      .regex(twoPass.stripPrefix("/").stripSuffix("/"), 10).get.size == 10)
+    assert(asked.size == 2, asked)
+    val queries: Seq[() => DataFrame] = Seq(
+      () => qe.executeAny("parse", 10),
+      () => qe.executeAny("symbol:read", 10),
+      () => qe.executeAny(twoPass, 10),
+      () => qe.execute(twoPass, 10).toDF(),
+      () => qe.executeWithSnippets("index", 100),
+      () => qe.executeWithSnippets(twoPass, 10))
+    def run(q: () => DataFrame): Seq[Row] = {
+      val df = q()
+      assert(df.queryExecution.executedPlan.toString.contains("LocalTableScan"))
+      df.collect().toSeq
+    }
+    val want = queries.map(run)
+    assert(want.forall(_.nonEmpty))
+    val threads = Executors.newFixedThreadPool(8)
+    try {
+      val got = (0 until 8).map(t => threads.submit(new Callable[Seq[Seq[Row]]] {
+        // each thread runs every query 4 times, starting at its own one
+        def call(): Seq[Seq[Row]] = (0 until 4 * queries.size).map(i =>
+          run(queries((t + i) % queries.size)))
+      }))
+      got.zipWithIndex.foreach { case (f, t) =>
+        f.get(5, TimeUnit.MINUTES).zipWithIndex.foreach { case (rows, i) =>
+          assert(rows == want((t + i) % queries.size), s"thread $t call $i")
+        }
+      }
+    } finally threads.shutdownNow()
+  }
+
+  test("regex verify reads the best-ranked candidates first and stops once k pass") {
+    val asked = mutable.ArrayBuffer.empty[Int]
+    val li = askingIndex(asked)
     val ls = new LocalSearch(searcher, li, Array.emptyLongArray, Long.MaxValue)
     def viaSpark(pattern: String, k: Int): Seq[(Long, Float)] =
       searcher.regexAll(pattern).orderBy(col("score").desc, col("docId").asc)
