@@ -112,6 +112,18 @@ object Bench {
       .executePage("the", 10))
     results += "page_meta_broad" -> tPage
 
+    // metadata-filtered queries through executeAny at k = 10: repo:, lang:
+    // and a scored path: with a term, and a bare repo-name search; p50 of
+    // 3 runs of each after one warm-up of each. Timed after every other
+    // query key, so none of them runs on warmer state than before
+    val filteredExec = new graft.engine.QueryExecutor(searcher)
+    val filteredSet = Seq("repo:src7 merge", "lang:de window",
+      "path:doc/12 scan", "repo:rc1")
+    filteredSet.foreach(q => filteredExec.executeAny(q, 10).collect())
+    val filteredLat = filteredSet.flatMap(q => (0 until 3).map(_ =>
+      timed(filteredExec.executeAny(q, 10).collect())._2)).sorted
+    results += "query_filtered_p50" -> filteredLat(filteredLat.size / 2)
+
     // --- pipeline ops
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -240,7 +252,10 @@ object Bench {
     val aggregateKeys = Set("index_build", "index_build_synth20k",
       "dedup_clusters", "delta_merge_4k")
     val total = results.iterator.collect {
-      case (k, v) if !aggregateKeys(k) && !k.endsWith("_recall_at10") &&
+      // query_filtered_p50 is left out too, so the total sums the same
+      // keys as before that key was added
+      case (k, v) if !aggregateKeys(k) && k != "query_filtered_p50" &&
+        !k.endsWith("_recall_at10") &&
         !k.endsWith("_candidate_frac") && !k.startsWith("ivf_train") => v
     }.sum
     val fps = nFiles / tBuild

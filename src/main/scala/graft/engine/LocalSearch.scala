@@ -14,9 +14,16 @@ import graft.tokenize.CodeTokenizer
   *     with one task per bucket;
   *   - regex: the Searcher.regexAll rules — required-gram conjunctive
   *     candidates and scores, narrowed by the fragment docId sets when
-  *     there are fewer than 3 required grams, then a `(?i)` find() verify
-  *     on content (null content never matches), in rank order until k
-  *     pass; those k are the result.
+  *     there are fewer than 3 required grams, then a `(?i)` find() on
+  *     content (null content never matches);
+  *   - label-checked terms or regex: every conjunctive candidate ranked,
+  *     then checked on its docs row by a row predicate (the branch's
+  *     metadata labels, compiled by QueryExecutor with filterDocs'
+  *     semantics; for a regex also the content match), in rank order
+  *     until k pass — those k are the result;
+  *   - scored path field: only candidates that also hold every `p:` gram
+  *     of the path literal count, scored t + p * 10f in f32 (p the
+  *     conjunctive `p:`-gram score), the pathHits / branchHits sum.
   *
   * Dead docIds come from the Searcher's shipped tombstones. Every call
   * returns None, leaving the query to Spark, when the summed df of the
@@ -24,6 +31,7 @@ import graft.tokenize.CodeTokenizer
   */
 private[engine] final class LocalSearch(se: Searcher, local: LocalIndex,
                                         dead: Array[Long], dfMax: Long) {
+  import LocalSearch._
 
   private def byRank(a: Hit, b: Hit): Boolean =
     a.score > b.score || (a.score == b.score && a.docId < b.docId)
@@ -55,53 +63,75 @@ private[engine] final class LocalSearch(se: Searcher, local: LocalIndex,
     }
   }
 
-  /** Top-k verified matches of a case-insensitive regex, as docs rows with
-    * content; None also when the pattern has no required gram (its
-    * candidate set is every doc).
+  /** Top-k of `target` whose docs rows pass `check`, as docs rows: with
+    * content for a regex target (whose rows must also match it,
+    * case-insensitively), metadata only otherwise. A non-empty
+    * `pathGrams` (the `p:` grams of a scored path literal) keeps only the
+    * candidates holding all of them and adds 10 × their score. None when
+    * over the df gate (target terms, fragment grams and path grams count)
+    * or for a regex with no required gram.
     */
-  def regex(pattern: String, k: Int): Option[Seq[PageRow]] = {
-    val frag = RegexPlanner.plan(pattern)
-    val grams = RegexPlanner.requiredGrams(frag).map("g:" + _).toSeq.sorted
-    if (grams.isEmpty) return None
-    val fragGrams = if (grams.size >= 3) Nil else litGrams(frag)
-    val all = (grams ++ fragGrams).distinct.sorted
+  def checked(target: Target, pathGrams: Seq[String],
+              check: Option[PageRow => Boolean],
+              k: Int): Option[Seq[PageRow]] = {
+    val (grams, narrow, reCheck) = target match {
+      case Terms(ts) =>
+        (ts.distinct.sorted, None, None)
+      case Regex(pattern) =>
+        val frag = RegexPlanner.plan(pattern)
+        val grams = RegexPlanner.requiredGrams(frag).map("g:" + _).toSeq.sorted
+        if (grams.isEmpty) return None
+        val re = java.util.regex.Pattern.compile("(?i)" + pattern)
+        (grams, if (grams.size >= 3) None else Some(frag),
+          Some((r: PageRow) => r.content != null && re.matcher(r.content).find()))
+    }
+    val fragGrams = narrow.toSeq.flatMap(litGrams)
+    val pGrams = pathGrams.distinct.sorted
+    val all = (grams ++ fragGrams ++ pGrams).distinct.sorted
     gated(all).map { ts =>
-      if (grams.exists(g => ts(g)._1 == 0L)) Nil
+      if (grams.isEmpty || (grams ++ pGrams).exists(g => ts(g)._1 == 0L)) Nil
       else {
         val runs = local.postingRuns(all).toSeq
-        val required = grams.toSet
-        val cands = topK(runs.filter(r => required(r.term)), grams,
-          grams.map(g => g -> ts(g)._2).toMap, Int.MaxValue)
-        val narrowed =
-          if (grams.size >= 3) cands
-          else fragmentDocs(frag, runs.groupBy(_.term)) match {
-            case Some(ids) => cands.filter(h => ids(h.docId))
-            case None => cands
+        def ranked(terms: Seq[String]): IndexedSeq[Hit] = {
+          val want = terms.toSet
+          topK(runs.filter(r => want(r.term)), terms,
+            terms.map(t => t -> ts(t)._2).toMap, Int.MaxValue)
+        }
+        val cands = ranked(grams)
+        val narrowed = narrow.flatMap(fragmentDocs(_, runs.groupBy(_.term)))
+          .fold(cands)(ids => cands.filter(h => ids(h.docId)))
+        val scored =
+          if (pGrams.isEmpty) narrowed
+          else {
+            val p = ranked(pGrams).iterator.map(h => h.docId -> h.score).toMap
+            narrowed.flatMap(h => p.get(h.docId).map(ps =>
+              Hit(h.docId, h.score + ps * 10f))).sortWith(byRank)
           }
-        verify(narrowed, java.util.regex.Pattern.compile("(?i)" + pattern), k)
+        val checks = reCheck.toSeq ++ check
+        verify(scored, r => checks.forall(_(r)), reCheck.isDefined, k)
       }
     }
   }
 
-  /** The first k ranked candidates whose content the regex finds in, in
-    * at most two rank-ordered passes over docs: the best max(k,
-    * VerifyChunk) candidates, then — only when fewer than k of them
-    * passed — all the others. A pass folds each docs file to its own best
-    * k, at most k rows: a row whose rank cannot enter that file's best k
-    * so far is not even matched. The files' best k merge to the pass's.
+  /** The first k ranked candidates whose docs rows pass `check`, in at
+    * most two rank-ordered passes over docs: the best max(k, VerifyChunk)
+    * candidates, then — only when fewer than k of them passed — all the
+    * others. A pass folds each docs file to its own best k, at most k
+    * rows: a row whose rank cannot enter that file's best k so far is not
+    * even checked. The files' best k merge to the pass's. Rows carry
+    * their candidate's score, and content only with `content`.
     */
-  private def verify(ranked: IndexedSeq[Hit], re: java.util.regex.Pattern,
-                     k: Int): Seq[PageRow] = {
+  private def verify(ranked: IndexedSeq[Hit], check: PageRow => Boolean,
+                     content: Boolean, k: Int): Seq[PageRow] = {
     var best = Seq.empty[(Int, PageRow)]
     def pass(from: Int, until: Int): Unit = {
       val rank = (from until until).iterator.map(i => ranked(i).docId -> i).toMap
-      val files = local.foldDocs(rank.keySet, content = true) { rows =>
+      val files = local.foldDocs(rank.keySet, content) { rows =>
         // max-heap on rank: the head is the worst of the best k so far
         val top = mutable.PriorityQueue.empty[(Int, PageRow)](Ordering.by(_._1))
         rows.foreach { r =>
           val i = rank(r.docId)
-          if ((top.size < k || i < top.head._1) && r.content != null &&
-              re.matcher(r.content).find()) {
+          if ((top.size < k || i < top.head._1) && check(r)) {
             top.enqueue(i -> r)
             if (top.size > k) top.dequeue()
           }
@@ -110,11 +140,11 @@ private[engine] final class LocalSearch(se: Searcher, local: LocalIndex,
       }
       best = (best ++ files.flatten).sortBy(_._1).take(k)
     }
-    val first = math.min(ranked.size, math.max(k, LocalSearch.VerifyChunk))
+    val first = math.min(ranked.size, math.max(k, VerifyChunk))
     pass(0, first)
     // the first pass holds the best-ranked candidates: once k of them
     // passed, no later candidate can enter the best k
-    if (best.size < k) pass(first, ranked.size)
+    if (best.size < k && first < ranked.size) pass(first, ranked.size)
     best.map { case (i, r) => r.copy(score = ranked(i).score) }
   }
 
@@ -156,6 +186,13 @@ private[engine] final class LocalSearch(se: Searcher, local: LocalIndex,
 }
 
 private[engine] object LocalSearch {
-  /** Candidates in the first regex-verify pass when k is smaller. */
+  /** Candidates in the first verify pass when k is smaller. */
   val VerifyChunk = 64
+
+  /** What a checked branch scores: a conjunctive term set, or a regex
+    * through its required grams.
+    */
+  sealed trait Target
+  final case class Terms(terms: Seq[String]) extends Target
+  final case class Regex(pattern: String) extends Target
 }

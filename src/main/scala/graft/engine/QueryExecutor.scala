@@ -56,23 +56,38 @@ import graft.tokenize.CodeTokenizer
   * VERDICT: the old code shuffled every docId of the corpus through
   * groupByKey for `repo:foo`).
   *
-  * Physical paths of execute / executeAny / executeWithSnippets:
+  * Physical paths of execute / executeAny / executeWithSnippets, and of
+  * executeRepo (and the repo faces built on it):
   *   - driver-local (LocalSearch over the Searcher's LocalIndex): the
-  *     query terms' posting runs and the ≤k winners' docs rows (for a
-  *     regex, its candidates' rows in rank order until k pass) are read in
+  *     query terms' posting runs and the ≤k winners' docs rows are read in
   *     the driver and scored with the Spark path's code (scoreBucket,
   *     RegexPlanner, Snippets); the result is a LocalRelation DataFrame
-  *     and runs no Spark job. Taken when ALL hold: exactly one DNF branch;
-  *     no `org:`/`repo:`/`path:`/`lang:`/`branch:`/`open:` label and no
-  *     `case:sensitive`; the target is a plain literal, a `symbol:`
-  *     literal, or a regex with at least one required gram; 1 ≤ k ≤
-  *     BroadcastKMax; the dict is cached in the driver; the searcher's
-  *     tombstones (if any) are shipped; and the summed df of the terms the
-  *     query reads is below the gate (LocalDfMax).
-  *   - Spark plan: every other query — multi-branch unions, metadata
-  *     filters, scored path fields, case-sensitive verify, regexes with no
-  *     required gram, unbounded k, big dicts, cogroup-sized tombstones and
-  *     over-gate queries. executePage and executeRepo always run here.
+  *     and runs no Spark job. A regex, or a branch with labels, ranks
+  *     every candidate and checks their docs rows in rank order until k
+  *     pass (metadata columns for labels, content for a regex);
+  *     executeWithSnippets then reads content for the ≤k winners only.
+  *     Taken for:
+  *       - exactly one DNF branch with a plain literal, a `symbol:`
+  *         literal, or a regex with at least one required gram, plus any
+  *         of `org:`/`repo:`/`path:`/`lang:` (checked on the docs row
+  *         with filterDocs' semantics; a plain `path:` literal keeps its
+  *         score, t + 10·p over its `p:` grams), with no `branch:` or
+  *         `open:` label and no `case:sensitive`; the searcher's dict
+  *         cached in the driver and its tombstones (if any) shipped;
+  *       - executeRepo with one repo-routed branch whose `repo:` is a
+  *         plain literal, optionally `org:`-qualified: the repo
+  *         sub-index's `g:` grams score in the driver over ITS files, the
+  *         name (and org segment) check runs on its docs rows, and the
+  *         highlights are computed in the driver;
+  *     in both cases with 1 ≤ k ≤ BroadcastKMax and the summed df of every
+  *     term the branch reads (target terms, fragment grams, `p:` grams)
+  *     below the gate (LocalDfMax).
+  *   - Spark plan: every other query — multi-branch unions, `branch:` and
+  *     `open:` labels, listings with labels and no target,
+  *     case-sensitive verify, regexes with no required gram, `repo:/re/`
+  *     and multi-branch repo searches, unbounded k, big dicts,
+  *     cogroup-sized tombstones and over-gate queries. executePage always
+  *     runs here.
   */
 /** The four reference readers (query/execute.rs:373-387 dispatch order). */
 /** Materialized top-k row fed to the snippet pass (executor-side on the
@@ -141,6 +156,19 @@ object QueryExecutor {
     * docs passes), and up to 2× slower above 58k. The crossover was
     * measured before the index wrote small pages and the local path read
     * its files in parallel, both of which made the local side cheaper.
+    *
+    * Labelled queries were measured the same way (30k generated files,
+    * executeAny at k = 10, local[4], medians of 5 alternating runs), with
+    * a label few candidates pass — a 3-file repo (0–3 hits, so every
+    * candidate's docs row is read), the rarest language (13% of files),
+    * the largest repo — on one term of df 1k–29k and on two-term literals
+    * of summed df 35k and 40k: 34–134 ms locally against 120–223 ms on
+    * Spark, local/Spark 0.20–0.90 (unlabelled 0.18–0.22). One cell read
+    * 1.13 (largest repo, df 29k) and 0.50 over 11 re-runs. Fused
+    * two-word regexes over the gate (required-gram df 61k) ran 0.85–1.03
+    * when forced local. So a label does not move the crossover below
+    * this gate, and the gate charges nothing for the candidates a label
+    * check reads.
     */
   private val LocalDfMax = 40000L
 
@@ -154,6 +182,20 @@ object QueryExecutor {
     Encoders.product[(String, Long, String, String, Float, Seq[(Int, Int)])]
       .schema.fields.zip(FileHitCols).map { case (f, n) => f.copy(name = n) })
   private val SnippetSchema: StructType = Encoders.product[SnippetRow].schema
+  private val RepoSchema: StructType = Encoders.product[RepoHit].schema
+  private val RepoHighlightSchema: StructType = StructType(
+    Encoders.product[(Long, String, Float, Seq[(Int, Int)])].schema.fields
+      .zip(Seq("repoId", "name", "score", "highlights"))
+      .map { case (f, n) => f.copy(name = n) })
+
+  /** Highlight ranges of the repo patterns (regex source, case-sensitive)
+    * on a repo name.
+    */
+  private[engine] def repoHighlights(name: String,
+                                     patterns: Seq[(String, Boolean)])
+      : Seq[(Int, Int)] =
+    patterns.flatMap { case (p, cs) => Snippets.highlight(name, p, cs) }
+      .distinct.sorted
 
   /** A file hit with its path highlight ranges (executeAny row). */
   private[engine] def fileHit(r: FileHitRow, pathPatterns: Seq[String])
@@ -233,13 +275,32 @@ class QueryExecutor(searcher: Searcher,
     searcher.shippedDeadDocIds.map(
       new LocalSearch(searcher, searcher.local, _, localDfMax))
 
-  /** Whether a branch has the driver-local path's shape: a target and no
-    * metadata label, case-insensitive.
+  /** Whether a branch has the driver-local path's shape: a target, no
+    * `branch:` or `open:` label, case-insensitive.
     */
   private def localShape(b: FlatQuery): Boolean =
-    b.target.isDefined && b.open.isEmpty && b.org.isEmpty &&
-      b.repo.isEmpty && b.path.isEmpty && b.lang.isEmpty &&
-      b.branch.isEmpty && !b.caseSensitive.contains(true)
+    b.target.isDefined && b.open.isEmpty && b.branch.isEmpty &&
+      !b.caseSensitive.contains(true)
+
+  /** The row predicate of a branch's `org:`/`repo:`/`path:`/`lang:`
+    * labels, with filterDocs' semantics (on lowercased fields this is also
+    * pathHits' substring check for a scored path); None without labels. A
+    * null field never matches.
+    */
+  private def labelCheck(b: FlatQuery): Option[PageRow => Boolean] = {
+    def sub(l: QLit): String => Boolean = {
+      val re = java.util.regex.Pattern.compile("(?i)" + (if (l.isRegex) l.value
+        else java.util.regex.Pattern.quote(l.value.toLowerCase)))
+      s => s != null && re.matcher(s.toLowerCase).find()
+    }
+    val checks: Seq[PageRow => Boolean] =
+      b.org.map(sub).map(f => (r: PageRow) =>
+        r.repo != null && f(QueryExecutor.orgOf(r.repo))).toSeq ++
+      b.repo.map(sub).map(f => (r: PageRow) => f(r.repo)) ++
+      b.path.map(sub).map(f => (r: PageRow) => f(r.path)) ++
+      b.lang.map(l => (r: PageRow) => l == r.lang)
+    if (checks.isEmpty) None else Some(r => checks.forall(_(r)))
+  }
 
   /** Top-k of `input` answered in the driver, in (score desc, docId asc)
     * order, or None when the query needs the Spark plan (see the class
@@ -255,21 +316,32 @@ class QueryExecutor(searcher: Searcher,
     }
     if (!searcher.dictCached) return None
     localSearch.flatMap { ls =>
-      def rows(hits: Seq[Hit]): Seq[PageRow] =
-        if (!fields) hits.map(h => PageRow(h.docId, h.score, null, null,
-          null, null, null))
-        else {
-          val byId = searcher.local.docRows(hits.map(_.docId).toSet, content)
-          hits.flatMap(h => byId.get(h.docId).map(_.copy(score = h.score)))
-        }
-      b.target.get match {
+      def withDocs(hits: Seq[Hit]): Seq[PageRow] = {
+        val byId = searcher.local.docRows(hits.map(_.docId).toSet, content)
+        hits.flatMap(h => byId.get(h.docId).map(_.copy(score = h.score)))
+      }
+      val target = b.target.get match {
         case ContentTarget(l) if l.isRegex || b.globalRegex.contains(true) =>
-          ls.regex(l.value, k)
+          LocalSearch.Regex(l.value)
         case ContentTarget(l) =>
-          ls.terms(CodeTokenizer.tokenize(l.value).toSeq, k).map(rows)
+          LocalSearch.Terms(CodeTokenizer.tokenize(l.value).toSeq)
         case SymbolTarget(l) =>
-          ls.terms(CodeTokenizer.tokenize(l.value).map("s:" + _).toSeq, k)
-            .map(rows)
+          LocalSearch.Terms(CodeTokenizer.tokenize(l.value).map("s:" + _).toSeq)
+      }
+      val pathGrams = if (!pathIsScored(b)) Nil
+        else CodeTokenizer.distinctTrigrams(b.path.get.value.toLowerCase, "p:")
+          .toSeq
+      (target, labelCheck(b)) match {
+        case (LocalSearch.Terms(terms), None) =>
+          ls.terms(terms, k).map(hits =>
+            if (fields) withDocs(hits)
+            else hits.map(h => PageRow(h.docId, h.score, null, null, null,
+              null, null)))
+        case (LocalSearch.Terms(_), check) if content =>
+          // the check reads metadata; content only for the ≤k winners
+          ls.checked(target, pathGrams, check, k)
+            .map(rows => withDocs(rows.map(r => Hit(r.docId, r.score))))
+        case (_, check) => ls.checked(target, pathGrams, check, k)
       }
     }
   }
@@ -612,12 +684,80 @@ class QueryExecutor(searcher: Searcher,
     * Returns (repoId, name, score) top-k, tie-break (score desc, repoId
     * asc); repoId is the sub-index's deterministic sha-rank docId.
     */
-  def executeRepo(input: String, k: Int): DataFrame = {
-    val rs = searcher.repoIndex.getOrElse(throw new IllegalStateException(
+  def executeRepo(input: String, k: Int): DataFrame =
+    localRepo(input, k) match {
+      case Some(hits) =>
+        localFrame(hits.map { case (h, _) => Row(h.repoId, h.name, h.score) },
+          QueryExecutor.RepoSchema)
+      case None => sparkRepo(input, k)
+    }
+
+  /** The repo-name sub-index, or an error naming the index without one. */
+  private def repoIndex: Searcher =
+    searcher.repoIndex.getOrElse(throw new IllegalStateException(
       s"index at ${searcher.indexRoot} has no repoIndex sub-index"))
+
+  /** The branches executeRepo answers: those the repo reader accepts. */
+  private def repoBranches(input: String): Seq[FlatQuery] = {
     val branches = QueryParser.parse(input).filter(
       readerFor(_).contains(ReaderKind.Repo))
     require(branches.nonEmpty, s"no repo-routed branch in: $input")
+    branches
+  }
+
+  /** A repo branch's byte-filter verify: its name pattern (regex source
+    * and case flag, as the highlights use them) and its `org:` pattern,
+    * each literal quoted unless /…/.
+    */
+  private final case class RepoFilter(source: String, caseSens: Boolean,
+                                      org: Option[String]) {
+    private def flagged(src: String) = (if (caseSens) "" else "(?i)") + src
+    def name: String = flagged(source)
+    def orgPattern: Option[String] = org.map(flagged)
+  }
+  private def repoFilter(b: FlatQuery): RepoFilter = {
+    def src(l: QLit): String =
+      if (l.isRegex) l.value else java.util.regex.Pattern.quote(l.value)
+    RepoFilter(src(b.repo.get), b.caseSensitive.getOrElse(false),
+      b.org.map(src))
+  }
+
+  /** The repo sub-index's driver-local scorer (its tombstones: none). */
+  private lazy val repoSearch: Option[LocalSearch] =
+    repoIndex.shippedDeadDocIds.map(
+      new LocalSearch(repoIndex, repoIndex.local, _, localDfMax))
+
+  /** executeRepo's top-k answered in the driver, with each name's
+    * highlight ranges, or None for the Spark plan. Taken for one
+    * repo-routed branch whose `repo:` is a plain literal (an `org:` may
+    * qualify it), 1 ≤ k ≤ BroadcastKMax, the sub-index's dict cached and
+    * its `g:` grams' summed df under the gate.
+    */
+  private def localRepo(input: String, k: Int)
+      : Option[Seq[(RepoHit, Seq[(Int, Int)])]] = {
+    if (k < 1 || k > BroadcastKMax) return None
+    val b = repoBranches(input) match {
+      case Seq(b) if !b.repo.get.isRegex => b
+      case _ => return None
+    }
+    if (!repoIndex.dictCached) return None
+    val f = repoFilter(b)
+    val name = java.util.regex.Pattern.compile(f.name)
+    val org = f.orgPattern.map(java.util.regex.Pattern.compile(_))
+    val check = (r: PageRow) => r.repo != null &&
+      name.matcher(r.repo).find() &&
+      org.forall(_.matcher(QueryExecutor.orgOf(r.repo)).find())
+    val grams = CodeTokenizer.distinctTrigrams(b.repo.get.value.toLowerCase,
+      "g:").toSeq
+    repoSearch.flatMap(_.checked(LocalSearch.Terms(grams), Nil, Some(check), k))
+      .map(_.map(r => RepoHit(r.docId, r.repo, r.score) ->
+        QueryExecutor.repoHighlights(r.repo, Seq((f.source, f.caseSens)))))
+  }
+
+  /** executeRepo as a Spark plan. */
+  private def sparkRepo(input: String, k: Int): DataFrame = {
+    val rs = repoIndex
+    val branches = repoBranches(input)
     def branchHits(b: FlatQuery): Dataset[Hit] = {
       val l = b.repo.get
       val caseSens = b.caseSensitive.getOrElse(false)
@@ -646,11 +786,9 @@ class QueryExecutor(searcher: Searcher,
     // like every metadata label)
     val orgSeg: Column = QueryExecutor.orgSegOf($"name")
     val anyMatch: Column = branches.map { b =>
-      val caseSens = b.caseSensitive.getOrElse(false)
-      def pat(l: QLit): String = (if (caseSens) "" else "(?i)") +
-        (if (l.isRegex) l.value else java.util.regex.Pattern.quote(l.value))
-      val nameOk = regexp_like($"name", lit(pat(b.repo.get)))
-      b.org.fold(nameOk)(o => nameOk && regexp_like(orgSeg, lit(pat(o))))
+      val f = repoFilter(b)
+      val nameOk = regexp_like($"name", lit(f.name))
+      f.orgPattern.fold(nameOk)(o => nameOk && regexp_like(orgSeg, lit(o)))
     }.reduce(_ || _)
     summed.toDF()
       .join(rs.docs.select($"docId", $"repo".as("name")), "docId")
@@ -665,29 +803,27 @@ class QueryExecutor(searcher: Searcher,
     * (query/execute.rs:689-693, snippet.rs:296+) — as a DATAFRAME column:
     * the highlight pass is a Dataset map over the ≤k winners,
     * executor-side (round-2 VERDICT breadth item: the old face collected
-    * a Seq through the driver). highlights = array of (start, end) char
+    * a Seq through the driver), or in the driver when executeRepo's
+    * driver-local path answers. highlights = array of (start, end) char
     * ranges on the name.
     */
   def executeRepoHighlightedDF(input: String, k: Int): DataFrame = {
     import searcher.spark.implicits._
-    val patterns = QueryParser.parse(input)
-      .filter(readerFor(_).contains(ReaderKind.Repo))
-      .map { b =>
-        val l = b.repo.get
-        ((if (l.isRegex) l.value
-          else java.util.regex.Pattern.quote(l.value)),
-          b.caseSensitive.getOrElse(false))
-      }
-    executeRepo(input, k)
-      .as[RepoHit]
-      .map { r =>
-        val hls = patterns.flatMap { case (p, cs) =>
-          Snippets.highlight(r.name, p, cs)
-        }.distinct.sorted
-        (r.repoId, r.name, r.score, hls)
-      }
-      .toDF("repoId", "name", "score", "highlights")
-      .orderBy($"score".desc, $"repoId".asc)
+    localRepo(input, k) match {
+      case Some(hits) =>
+        localFrame(hits.map { case (h, hls) =>
+          Row(h.repoId, h.name, h.score, hls.map(Row.fromTuple))
+        }, QueryExecutor.RepoHighlightSchema)
+      case None =>
+        val patterns = repoBranches(input).map(repoFilter)
+          .map(f => (f.source, f.caseSens))
+        sparkRepo(input, k)
+          .as[RepoHit]
+          .map(r => (r.repoId, r.name, r.score,
+            QueryExecutor.repoHighlights(r.name, patterns)))
+          .toDF(QueryExecutor.RepoHighlightSchema.fieldNames.toIndexedSeq: _*)
+          .orderBy($"score".desc, $"repoId".asc)
+    }
   }
 
   /** Driver-side face of executeRepoHighlightedDF (compat). */

@@ -100,6 +100,71 @@ class LocalPathSpec extends AnyFunSuite {
     }
   }
 
+  // a content, symbol or regex target with metadata labels: each label
+  // kind, a regex org (anchored, so it holds on the org segment and not
+  // on the whole name), a scored and a regex path, two labels, and one
+  // no candidate passes
+  val labelled = Seq("repo:repo1 parse", "org:org2 return",
+    "org:/^org[12]$/ return", "lang:rust index",
+    "path:mod1 if", "path:/mod[0-3]/ parse", "repo:repo lang:python return",
+    "repo:org3 symbol:read", "lang:go /return [a-z]+/",
+    "org:doesnotexist parse")
+  // bare repo-name searches, answered from the repo sub-index
+  val bareRepo = Seq("repo:repo3", "repo:org", "org:org1 repo:repo")
+
+  /** The local answers of `q` equal `spark`'s (rows and frame shapes) and
+    * run no Spark plan.
+    */
+  private def sameAsSpark(qe: QueryExecutor, spark: QueryExecutor, q: String,
+                          k: Int): Unit = {
+    val frames: Seq[QueryExecutor => Dataset[_]] =
+      if (bareRepo.contains(q))
+        Seq(_.executeAny(q, k), _.executeRepo(q, k),
+          _.executeRepoHighlightedDF(q, k))
+      else Seq(_.execute(q, k), _.executeAny(q, k),
+        _.executeWithSnippets(q, k))
+    frames.foreach { f =>
+      val (got, want) = (f(qe), f(spark))
+      assert(isLocal(got), s"'$q' k=$k: ${got.queryExecution.executedPlan}")
+      assert(!isLocal(want), s"'$q' k=$k")
+      assert(got.collect().toSeq == want.collect().toSeq, s"'$q' k=$k")
+      assert(shape(got) == shape(want), s"'$q' k=$k")
+    }
+  }
+
+  for (q <- labelled ++ bareRepo; k <- Seq(1, 10, 100)) {
+    test(s"labels: local == oracle == Spark path: '$q' k=$k") {
+      sameAsSpark(local, viaSpark, q, k)
+      if (bareRepo.contains(q)) {
+        val got = local.executeRepo(q, k).collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getFloat(2))).toSeq
+        assert(got.nonEmpty)
+        assert(got == oracle.executeRepoQuery(q, k))
+      } else {
+        val hits = local.execute(q, k).collect()
+          .map(h => (h.docId, h.score)).toSeq
+        assert(hits.isEmpty == q.startsWith("org:doesnotexist"), hits)
+        assert(hits == oracle.executeQuery(q, k))
+      }
+    }
+  }
+
+  test("labels: local == Spark path on a MultiSearcher with shipped tombstones") {
+    val ms = inc.searcher()
+    val mLocal = new QueryExecutor(ms)
+    val mSpark = new QueryExecutor(ms, localDfMax = 0L)
+    for (q <- labelled ++ bareRepo; k <- Seq(1, 10, 100))
+      sameAsSpark(mLocal, mSpark, q, k)
+    // a repo label on the deleted repo: its docs match before the delete
+    // and nothing after it
+    val deleted = "repo:/^github.com\\/org0\\/repo0$/ parse"
+    assert(oracle.executeQuery(deleted, 10).nonEmpty)
+    val gone = mLocal.executeAny(deleted, 10)
+    assert(isLocal(gone))
+    assert(gone.collect().isEmpty)
+    assert(mSpark.executeAny(deleted, 10).collect().isEmpty)
+  }
+
   test("a local executeAny / executeWithSnippets submits zero Spark jobs") {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger(0)
@@ -111,15 +176,22 @@ class LocalPathSpec extends AnyFunSuite {
           marker.countDown()
         else jobs.incrementAndGet()
     }
-    // warm: the dict cache, stats and the index footers load once
+    // warm: the dict cache, stats and the index footers load once, for
+    // the index and for its repo sub-index
     local.executeAny("parse", 10).collect()
     local.executeWithSnippets("/return [a-z]+/", 10).collect()
+    local.executeAny("repo:repo1", 10).collect()
     sc.addSparkListener(listener)
     try {
-      for (q <- Seq("parse", "symbol:read", "/return [a-z]+/", "if return")) {
+      // plain, symbol, regex and fused-regex targets, then the benchmark's
+      // filtered shapes: repo:, lang: and a scored path: with a term
+      for (q <- Seq("parse", "symbol:read", "/return [a-z]+/", "if return",
+                    "repo:repo1 parse", "lang:rust index", "path:mod1 if")) {
         local.executeAny(q, 10).collect()
         local.executeWithSnippets(q, 10).collect()
       }
+      // and a bare repo: (a repo-name search, not a content query)
+      local.executeAny("repo:org2", 10).collect()
       // listener events arrive in submission order: once the marker job
       // is seen, every earlier job start has been counted
       sc.setLocalProperty("graft.test.marker", "1")
@@ -139,11 +211,14 @@ class LocalPathSpec extends AnyFunSuite {
     assert(got.collect().map(h => (h.docId, h.score)).toSeq == want, q)
   }
 
-  test("gate: metadata labels, two DNF branches and case:sensitive fall back") {
-    for (q <- Seq("repo:repo1 parse", "lang:rust index", "path:mod1 if",
-                  "org:org2 return", "branch:main parse",
-                  "parse or index", "case:sensitive Index"))
+  test("gate: branch:, two DNF branches, case:sensitive, listings fall back") {
+    for (q <- Seq("branch:main parse", "parse or index",
+                  "case:sensitive Index", "lang:rust", "repo:/r.p/"))
       fallsBack(local, q, 10, oracle.executeQuery(q, 10))
+    val repo = local.executeRepo("repo:/r.p/", 10)
+    assert(!isLocal(repo))
+    assert(repo.collect().map(r => (r.getLong(0), r.getString(1),
+      r.getFloat(2))).toSeq == oracle.executeRepoQuery("repo:/r.p/", 10))
   }
 
   test("gate: k above BroadcastKMax falls back") {

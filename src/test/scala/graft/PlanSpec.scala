@@ -128,7 +128,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("1–2-char repo query scores via sub-index postings, not candidate-all " +
        "(v9 short grams)") {
-    val exec = new graft.engine.QueryExecutor(searcher)
+    // localDfMax = 0: the Spark plan, not the driver-local path's
+    // LocalTableScan
+    val exec = new graft.engine.QueryExecutor(searcher, localDfMax = 0L)
     val plan = planOf(exec.executeRepo("repo:or", 10))
     assert(plan.contains("In(term, [g:or])") || plan.contains("EqualTo(term,g:or)"),
       plan.take(3000))

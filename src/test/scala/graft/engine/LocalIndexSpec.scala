@@ -287,7 +287,8 @@ class LocalIndexSpec extends AnyFunSuite {
     val asked = mutable.ArrayBuffer.empty[Int]
     val li = askingIndex(asked)
     assert(new LocalSearch(searcher, li, Array.emptyLongArray, Long.MaxValue)
-      .regex(twoPass.stripPrefix("/").stripSuffix("/"), 10).get.size == 10)
+      .checked(LocalSearch.Regex(twoPass.stripPrefix("/").stripSuffix("/")),
+        Nil, None, 10).get.size == 10)
     assert(asked.size == 2, asked)
     val queries: Seq[() => DataFrame] = Seq(
       () => qe.executeAny("parse", 10),
@@ -338,7 +339,8 @@ class LocalIndexSpec extends AnyFunSuite {
     assert(n > LocalSearch.VerifyChunk * 2, n)
     for (k <- Seq(1, 10)) {
       asked.clear()
-      val got = ls.regex("return", k).get.map(r => (r.docId, r.score))
+      val got = ls.checked(LocalSearch.Regex("return"), Nil, None, k).get
+        .map(r => (r.docId, r.score))
       assert(got == viaSpark("return", k))
       assert(asked.toSeq == Seq(LocalSearch.VerifyChunk), s"k=$k")
     }
@@ -346,7 +348,7 @@ class LocalIndexSpec extends AnyFunSuite {
     // the same candidates, none of which matches: a second pass reads
     // all the others
     asked.clear()
-    assert(ls.regex("return[0-9]q", 1).get.isEmpty)
+    assert(ls.checked(LocalSearch.Regex("return[0-9]q"), Nil, None, 1).get.isEmpty)
     assert(viaSpark("return[0-9]q", 1).isEmpty)
     assert(asked.toSeq == Seq(LocalSearch.VerifyChunk, n - LocalSearch.VerifyChunk))
   }
