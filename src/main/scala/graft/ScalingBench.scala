@@ -117,7 +117,6 @@ object ScalingBench {
       // (a 2-wave schedule lets the slowest task set the wall clock) and
       // make N vs 4N a pure parallelism comparison
       val b = new IndexBuilder(spark, root, bucketSize = 4096,
-        includeTrigrams = !sys.env.contains("GRAFT_NO_TRIGRAMS"),
         numPartitions = 128)
       val (_, tDocs) = Bench.timed(b.buildDocs(corpus))
       val (_, tPost) = Bench.timed(b.buildPostings())

@@ -349,57 +349,36 @@ class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
     *     the union of branch candidates instead of a full scan, which
     *     requiredGrams alone (an intersection across branches) cannot do.
     */
-  def regexAll(pattern: String, caseSensitive: Boolean = false): DataFrame = {
-    import graft.query.RegexPlanner
-    val frag = RegexPlanner.plan(pattern)
-    val grams = RegexPlanner.requiredGrams(frag).map("g:" + _).toSeq.sorted
+  def regexAll(pattern: String, caseSensitive: Boolean = false): DataFrame =
+    regexAll(LocalSearch.Regex(pattern, caseSensitive))
+
+  /** regexAll of a compiled regex: its plan (LocalSearch.Regex) evaluated
+    * with Spark joins.
+    */
+  private[engine] def regexAll(re: LocalSearch.Regex): DataFrame = {
     val candidates: DataFrame =
-      if (grams.isEmpty) docs.select($"docId").withColumn("score", lit(0f))
+      if (re.grams.isEmpty) docs.select($"docId").withColumn("score", lit(0f))
       else {
-        val ts = termStats(grams)
+        val ts = termStats(re.grams)
         if (ts.exists(_._2._1 == 0L)) // a required gram is absent: no matches
           return docs.select($"docId", lit(0f).as("score"),
             $"repo", $"path", $"lang", $"content").limit(0)
-        scoreAll(grams, ts.map { case (t, (_, w)) => t -> w },
+        scoreAll(re.grams, ts.map { case (t, (_, w)) => t -> w },
           conjunctive = true).toDF()
       }
-    // cost heuristic: the fragment set-ops pass is worth its extra jobs
-    // only when the requiredGrams prefilter is weak (few/no grams — e.g.
-    // pure alternations); with ≥3 required grams the conjunctive candidate
-    // set is already tight and verify is cheap
-    val narrowed =
-      if (grams.size >= 3) candidates
-      else fragmentCandidates(frag) match {
-        case Some(fc) => candidates.join(fc, Seq("docId"), "left_semi")
-        case None => candidates
-      }
-    val pat = if (caseSensitive) pattern else "(?i)" + pattern
+    val narrowed = re.narrow.flatMap(fragmentCandidates)
+      .fold(candidates)(fc => candidates.join(fc, Seq("docId"), "left_semi"))
     narrowed.join(docs, "docId")
-      .filter(regexp_like($"content", lit(pat)))
+      .filter(regexp_like($"content", lit(re.verify)))
   }
 
   /** Evaluate a regex plan Fragment to a candidate docId set (None = all
-    * docs / no constraint). Lit → AND of its trigrams; And → intersection;
-    * Or → union; Break → None.
+    * docs / no constraint) with the rules of LocalSearch.narrowing.
     */
-  def fragmentCandidates(frag: graft.query.Fragment): Option[DataFrame] = {
-    import graft.query.Fragment._
-    frag match {
-      case Break => None
-      case Lit(s) =>
-        val grams = graft.tokenize.CodeTokenizer.distinctTrigrams(s, "g:")
-        if (s.length < 3 || grams.isEmpty) None
-        else Some(gramDocIds(grams.toSeq.sorted))
-      case And(cs) =>
-        val sets = cs.flatMap(fragmentCandidates)
-        if (sets.isEmpty) None
-        else Some(sets.reduce((a, b) => a.join(b, Seq("docId"), "left_semi")))
-      case Or(cs) =>
-        val sets = cs.map(fragmentCandidates)
-        if (sets.exists(_.isEmpty)) None // one unconstrained branch ⇒ all
-        else Some(sets.flatten.reduce(_ union _).distinct())
-    }
-  }
+  def fragmentCandidates(frag: graft.query.Fragment): Option[DataFrame] =
+    LocalSearch.narrowing(frag)(gramDocIds)(
+      _.reduce((a, b) => a.join(b, Seq("docId"), "left_semi")),
+      _.reduce(_ union _).distinct())
 
   /** docIds containing ALL the given posting terms (conjunctive semi-join
     * via the count-matching aggregation — SURVEY §2.6 B3).

@@ -63,7 +63,6 @@ class IndexBuilder(
     @transient val spark: SparkSession,
     val indexRoot: String,
     bucketSize: Long = 1L << 20,
-    includeTrigrams: Boolean = true,
     numPartitions: Int = 0,
     docIdOffset: Long = 0L,
     includeRepoIndex: Boolean = true,
@@ -293,7 +292,6 @@ class IndexBuilder(
     val bNormCache = spark.sparkContext.broadcast(
       Bm25.normCache(stats.avgdl.toFloat))
     val bs = bucketSize
-    val trig = includeTrigrams
     val shortG = shortContentGrams
     val lin = newLineageAcc()
     // Source from the docs stage output: docIds, normIds and the
@@ -314,12 +312,6 @@ class IndexBuilder(
             new PartialMergeIterator(it, bNormCache.value))(
             r => s"${r.term}:${r.bucket}:${r.df}")
         }
-    if (!trig) {
-      mergePhase(strPartials).write.options(PageOptions).mode("overwrite")
-        .parquet(postingsPath)
-      writeLineage(lin)
-      return
-    }
     // Gram namespaces ("g:" content 3-grams — 1–3-grams for the repo-name
     // sub-index — and "p:" path 1–3-gram windows, reference
     // NgramTokenizer(1,3) indexes.rs:249). Not-indexed stubs (D7) still
@@ -387,7 +379,7 @@ class IndexBuilder(
     if (isCommitted(s"$indexRoot/repoIndex/dict")) return
     IndexBuilder.buildRepoIndexAt(spark,
       spark.read.parquet(docsPath).select($"repo"),
-      s"$indexRoot/repoIndex", bucketSize, includeTrigrams, numPartitions)
+      s"$indexRoot/repoIndex", bucketSize, numPartitions)
   }
 
   /** Layout-version gate, run before any stage resumes: a FORMAT mismatch
@@ -486,7 +478,6 @@ object IndexBuilder {
     */
   def buildRepoIndexAt(spark: SparkSession, repoNames: DataFrame,
                        rootDir: String, bucketSize: Long,
-                       includeTrigrams: Boolean = true,
                        numPartitions: Int = 0): Unit = {
     import spark.implicits._
     val names = repoNames.select($"repo").distinct()
@@ -503,7 +494,7 @@ object IndexBuilder {
       val p = math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
         names.count() / 5000L + 1L)).toInt
-      new IndexBuilder(spark, rootDir, bucketSize, includeTrigrams,
+      new IndexBuilder(spark, rootDir, bucketSize,
         numPartitions = p, docIdOffset = 0L, includeRepoIndex = false,
         shortContentGrams = true, // names get the full 1–3-gram surface
         recordLineage = false)

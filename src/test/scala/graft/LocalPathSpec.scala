@@ -103,14 +103,16 @@ class LocalPathSpec extends AnyFunSuite {
   // a content, symbol or regex target with metadata labels: each label
   // kind, a regex org (anchored, so it holds on the org segment and not
   // on the whole name), a scored and a regex path, two labels, and one
-  // no candidate passes
+  // no candidate passes; mixed-case literals match case-insensitively
   val labelled = Seq("repo:repo1 parse", "org:org2 return",
+    "repo:REPO1 parse", "org:ORG2 return", "path:MOD1 if",
     "org:/^org[12]$/ return", "lang:rust index",
     "path:mod1 if", "path:/mod[0-3]/ parse", "repo:repo lang:python return",
     "repo:org3 symbol:read", "lang:go /return [a-z]+/",
     "org:doesnotexist parse")
   // bare repo-name searches, answered from the repo sub-index
-  val bareRepo = Seq("repo:repo3", "repo:org", "org:org1 repo:repo")
+  val bareRepo = Seq("repo:repo3", "repo:org", "org:org1 repo:repo",
+    "repo:REPO3")
 
   /** The local answers of `q` equal `spark`'s (rows and frame shapes) and
     * run no Spark plan.

@@ -439,7 +439,12 @@ class QueryExecutorSpec extends AnyFunSuite {
   }
 
   test("repo results carry highlight ranges on the name (HighlightedString)") {
-    val hs = exec.executeRepoHighlighted("repo:repo1", 10)
+    def highlighted(q: String, k: Int) =
+      exec.executeRepoHighlightedDF(q, k).collect().toSeq.map(r =>
+        (r.getLong(0), r.getString(1), r.getFloat(2),
+          r.getSeq[org.apache.spark.sql.Row](3)
+            .map(h => (h.getInt(0), h.getInt(1)))))
+    val hs = highlighted("repo:repo1", 10)
     assert(hs.size == 1)
     val (_, name, _, hls) = hs.head
     assert(name == "github.com/org1/repo1")
@@ -447,7 +452,7 @@ class QueryExecutorSpec extends AnyFunSuite {
     assert(hls.nonEmpty && hls.forall { case (s, e) =>
       name.substring(s, e).equalsIgnoreCase("repo1") })
     // regex branch: ranges are the regex matches
-    val hr = exec.executeRepoHighlighted("repo:/org[0-9]/", 50)
+    val hr = highlighted("repo:/org[0-9]/", 50)
     assert(hr.size == 10 && hr.forall { case (_, n, _, h) =>
       h.nonEmpty && h.forall { case (s, e) =>
         n.substring(s, e).matches("(?i)org[0-9]") } })
