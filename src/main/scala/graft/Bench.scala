@@ -124,6 +124,19 @@ object Bench {
       timed(filteredExec.executeAny(q, 10).collect())._2)).sorted
     results += "query_filtered_p50" -> filteredLat(filteredLat.size / 2)
 
+    // the reference query set through executeAny at k = 10 (the driver-
+    // local path, where the gate admits it), p50 of 3 runs of each after
+    // one warm-up of each; then bare repo:rc1 on the warmed executor, p50
+    // of 3 (repo_search above times a cold first open). Timed after every
+    // other query key
+    querySet.foreach(q => filteredExec.executeAny(q, 10).collect())
+    val localLat = querySet.flatMap(q => (0 until 3).map(_ =>
+      timed(filteredExec.executeAny(q, 10).collect())._2)).sorted
+    results += "query_local_p50" -> localLat(localLat.size / 2)
+    val repoLat = (0 until 3).map(_ =>
+      timed(filteredExec.executeRepo("repo:rc1", 10).collect())._2).sorted
+    results += "repo_search_warm" -> repoLat(1)
+
     // --- pipeline ops
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -251,10 +264,12 @@ object Bench {
     // ivf_train/ivf_topk split (round-4 ADVICE)
     val aggregateKeys = Set("index_build", "index_build_synth20k",
       "dedup_clusters", "delta_merge_4k")
+    val addedKeys = Set("query_filtered_p50", "query_local_p50",
+      "repo_search_warm")
     val total = results.iterator.collect {
-      // query_filtered_p50 is left out too, so the total sums the same
-      // keys as before that key was added
-      case (k, v) if !aggregateKeys(k) && k != "query_filtered_p50" &&
+      // the query keys added since are left out too, so the total sums
+      // the same keys as before they were added
+      case (k, v) if !aggregateKeys(k) && !addedKeys(k) &&
         !k.endsWith("_recall_at10") &&
         !k.endsWith("_candidate_frac") && !k.startsWith("ivf_train") => v
     }.sum

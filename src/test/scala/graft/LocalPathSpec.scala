@@ -204,6 +204,42 @@ class LocalPathSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("local queries create no broadcast") {
+    val blocks = org.apache.spark.SparkEnv.get.blockManager
+    def broadcasts() = blocks.getMatchingBlockIds(_.isBroadcast).toSet
+    // warm, as above: what loads once may broadcast
+    local.executeAny("parse", 10).collect()
+    local.executeWithSnippets("/return [a-z]+/", 10).collect()
+    local.executeAny("repo:repo1", 10).collect()
+    val before = broadcasts()
+    for (q <- Seq("parse", "symbol:read", "/return [a-z]+/", "if return",
+                  "repo:repo1 parse", "lang:rust index", "path:mod1 if",
+                  "index", "/par.e/")) {
+      local.executeAny(q, 10).collect()
+      local.executeWithSnippets(q, 10).collect()
+    }
+    // and two bare repo-name searches, over the repo sub-index
+    for (q <- Seq("repo:org2", "repo:repo3")) local.executeAny(q, 10).collect()
+    // the ContextCleaner may remove broadcasts meanwhile, never add one
+    val added = broadcasts() -- before
+    assert(added.isEmpty, s"${added.size} broadcasts over 20 local queries")
+  }
+
+  test("an index opened at a bare path and at a file: URI gives the same local frames") {
+    val uri = new QueryExecutor(new Searcher(spark, "file://" + searcher.indexRoot))
+    for (q <- Seq("parse", "repo:repo1 parse", "/return [a-z]+/")) {
+      val frames: Seq[QueryExecutor => Dataset[_]] = Seq(_.execute(q, 10),
+        _.executeAny(q, 10), _.executeWithSnippets(q, 10))
+      frames.foreach { f =>
+        val (got, want) = (f(uri), f(local))
+        assert(isLocal(got) && isLocal(want), q)
+        assert(got.collect().toSeq == want.collect().toSeq, q)
+        assert(shape(got) == shape(want), q)
+      }
+    }
+    assert(!new java.io.File("file:").exists(), "stray file: dir under the cwd")
+  }
+
   /** The query runs as a Spark plan and still matches the oracle. */
   private def fallsBack(qe: QueryExecutor, q: String, k: Int,
                         want: Seq[(Long, Float)]): Unit = {

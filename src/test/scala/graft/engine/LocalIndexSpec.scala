@@ -2,7 +2,7 @@ package graft.engine
 
 import java.io.IOException
 import java.net.URI
-import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.concurrent.{Callable, ConcurrentHashMap, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable
@@ -23,7 +23,10 @@ import graft.util.FsUtil
 
 /** A local file system under the `trackfs:` scheme that counts the bytes
   * its input streams read (vectored reads included) and the streams it
-  * opens and closes, and fails to open the files named in `poisoned`.
+  * opens and closes, per file name the streams opened and the streams
+  * that read any of the file's last 8 bytes (parquet's footer length and
+  * magic: one footer read), and fails to open the files named in
+  * `poisoned`.
   */
 class TrackingFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("trackfs:///")
@@ -33,19 +36,35 @@ class TrackingFs extends RawLocalFileSystem {
       throw new IOException(s"poisoned ${f.getName}")
     val file = new java.io.RandomAccessFile(pathToFile(f), "r")
     TrackingFs.opened.incrementAndGet()
+    TrackingFs.count(TrackingFs.opens, f.getName)
+    val tail = file.length() - 8
     val counted = new FSInputStream {
       private var closed = false
+      private var footer = false
+      private def touched(pos: Long, n: Int): Unit =
+        if (!footer && pos + n > tail) {
+          footer = true
+          TrackingFs.count(TrackingFs.footerReads, f.getName)
+        }
       override def seek(pos: Long): Unit = file.seek(pos)
       override def getPos: Long = file.getFilePointer
       override def seekToNewSource(pos: Long): Boolean = false
       override def read(): Int = {
+        val pos = file.getFilePointer
         val b = file.read()
-        if (b >= 0) TrackingFs.bytesRead.incrementAndGet()
+        if (b >= 0) {
+          TrackingFs.bytesRead.incrementAndGet()
+          touched(pos, 1)
+        }
         b
       }
       override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val pos = file.getFilePointer
         val n = file.read(b, off, len)
-        if (n > 0) TrackingFs.bytesRead.addAndGet(n)
+        if (n > 0) {
+          TrackingFs.bytesRead.addAndGet(n)
+          touched(pos, n)
+        }
         n
       }
       override def close(): Unit = synchronized {
@@ -62,7 +81,19 @@ object TrackingFs {
   val bytesRead = new AtomicLong()
   val opened = new AtomicInteger()
   val closed = new AtomicInteger()
+  /** Streams opened, by file name. */
+  val opens = new ConcurrentHashMap[String, AtomicInteger]()
+  /** Streams that read the file's footer, by file name. */
+  val footerReads = new ConcurrentHashMap[String, AtomicInteger]()
   @volatile var poisoned = Set.empty[String]
+
+  private def count(m: ConcurrentHashMap[String, AtomicInteger],
+                    name: String): Unit =
+    m.computeIfAbsent(name, _ => new AtomicInteger()).incrementAndGet()
+
+  /** The count of `name` in `m` (opens or footerReads). */
+  def of(m: ConcurrentHashMap[String, AtomicInteger], name: String): Int =
+    Option(m.get(name)).fold(0)(_.get)
 
   /** The `trackfs:` spelling of a local path, with the scheme registered. */
   def root(spark: org.apache.spark.sql.SparkSession, path: String): String = {
@@ -80,7 +111,8 @@ object TrackingFs {
   * small pages, so a one-term read decodes a small part of the postings;
   * the per-file reads of a call run in parallel, concurrent callers get
   * the sequential answers, and a failed file read reaches the caller with
-  * every reader closed.
+  * every reader closed. A table is opened once: each file's footer is read
+  * once per Searcher, and a file of zero rows is never read again.
   */
 class LocalIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -265,6 +297,69 @@ class LocalIndexSpec extends AnyFunSuite {
     assert(li.postingRuns(terms).map(key).toSet == want)
     assert(li.docRows(ids, content = true).keySet == wantDocs)
     assert(TrackingFs.opened.get == TrackingFs.closed.get)
+  }
+
+  /** The number of rows the footer of `f` counts. */
+  private def rowCount(f: org.apache.hadoop.fs.FileStatus): Long = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()))
+    try r.getRecordCount
+    finally r.close()
+  }
+
+  test("a zero-row docs file is dropped when the table opens, and no later read opens it") {
+    val dir = TestSpark.tempDir("localindex-empty")
+    searcher.docs.repartition(2).write.parquet(s"$dir/docs")
+    // an empty frame still writes one part file, holding no rows
+    searcher.docs.limit(0).write.mode("append").parquet(s"$dir/docs")
+    val files = FsUtil.list(s"$dir/docs")
+      .filter(_.getPath.getName.endsWith(".parquet"))
+    val (empty, full) = files.partition(rowCount(_) == 0)
+    assert(empty.size == 1 && full.size == 2, files.map(_.getPath))
+    val emptyName = empty.head.getPath.getName
+    val docs = spark.read.parquet(s"${TrackingFs.root(spark, dir)}/docs")
+    val li = new LocalIndex(spark, searcher.postings, docs)
+    val ids = Set(1L, 7L, 30L, 59L, 60L)
+    val opens0 = TrackingFs.of(TrackingFs.opens, emptyName)
+    // the first read opens the table: the empty file's footer, once
+    matchesSparkScan(li, searcher.postings.toDF(), searcher.docs, ids)
+    assert(TrackingFs.of(TrackingFs.opens, emptyName) == opens0 + 1)
+    for (content <- Seq(true, false))
+      assert(li.docRows(ids, content).keySet == ids)
+    assert(li.foldDocs(ids, content = false)(_.size).sum == ids.size)
+    assert(TrackingFs.of(TrackingFs.opens, emptyName) == opens0 + 1)
+    assert(full.forall(f => TrackingFs.of(TrackingFs.opens, f.getPath.getName) > 1))
+  }
+
+  test("one Searcher reads each postings and docs footer once over many queries") {
+    val tracked = new Searcher(spark, TrackingFs.root(spark, searcher.indexRoot))
+    // what the Searcher loads through Spark: the tables' schemas, the
+    // dict and the stats
+    tracked.postings.schema
+    tracked.docs.schema
+    tracked.termStats(Seq("parse"))
+    assert(tracked.dictCached)
+    val names = Seq("postings", "docs").flatMap(t =>
+      FsUtil.list(s"${searcher.indexRoot}/$t").map(_.getPath.getName)
+        .filter(_.endsWith(".parquet")))
+    assert(names.size > 2)
+    val before = names.map(TrackingFs.of(TrackingFs.footerReads, _))
+    val qe = new QueryExecutor(tracked)
+    // one-term, two-term, regex, labelled and page queries, 20 in all
+    val queries: Seq[() => DataFrame] = Seq("parse", "if", "return",
+        "read parse", "if return", "/return [a-z]+Build/", "/par.e/",
+        "repo:repo1 parse", "lang:rust if", "path:mod1 return")
+      .flatMap(q => Seq(() => qe.executeAny(q, 10),
+        () => qe.executeWithSnippets(q, 100)))
+    assert(queries.size == 20)
+    queries.foreach { q =>
+      val df = q()
+      assert(df.queryExecution.executedPlan.toString.contains("LocalTableScan"))
+      df.collect()
+    }
+    val reads = names.map(TrackingFs.of(TrackingFs.footerReads, _))
+      .zip(before).map { case (a, b) => a - b }
+    assert(reads.forall(_ == 1), names.zip(reads))
   }
 
   /** A LocalIndex over the spec's index that records the size of each
