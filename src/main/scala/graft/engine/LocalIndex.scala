@@ -4,6 +4,7 @@ import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException,
   ExecutorService, Executors}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -13,22 +14,23 @@ import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.api.InitContext
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData,
+  ColumnPath, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.internal.column.columnindex.{ColumnIndex, OffsetIndex}
+import org.apache.parquet.internal.filter2.columnindex.ColumnIndexStore
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.index.PostingRun
+import graft.index.{Block, PostingRun}
 
 /** Driver-local reads of an index's postings and docs tables — the read
   * layer of the small-query path (QueryExecutor). Rows come through
@@ -39,19 +41,24 @@ import graft.index.PostingRun
   * (the one holding the columns read — MultiSearcher's docs frame also
   * scans its tombstones), as the relation listed them. A Searcher's files
   * are immutable for its lifetime, so each table is opened once, on its
-  * first read: per file, the input file of its listed status and its
-  * footer, read once; files whose footer counts zero rows are dropped and
-  * never opened again. Each required schema (postings; docs metadata;
-  * docs page) gets one Hadoop conf, derived on its first read from one
-  * copy of the session's. Pages and rows are never kept: every call
-  * re-reads what it needs.
+  * first read, and only metadata is kept: per file, the input file of its
+  * listed status and its footer, read once (files whose footer counts
+  * zero rows are dropped and never opened again), and its row groups'
+  * page indexes — each column's column index and offset index, read on
+  * the first read that asks for it; each required schema (postings; docs
+  * metadata; docs page) gets one Hadoop conf, derived on its first read
+  * from one copy of the session's. Pages and rows are never kept: every
+  * call re-reads what it needs.
   *
-  * Each read passes an `in` filter on the key column (`term`, `docId`)
-  * to the reader, so parquet skips row groups and pages whose statistics,
-  * dictionary or column index cannot hold a wanted key — IndexBuilder
-  * writes small pages (IndexBuilder.PageOptions), so a few keys decode a
-  * few pages; the rows it does return are filtered on the raw key before
-  * deserializing.
+  * Each read passes the reader a balanced OR of one `eq` per wanted key
+  * on the key column (`term`, `docId`), so parquet skips the row groups
+  * and pages whose statistics, dictionary or column index cannot hold a
+  * wanted key. Not `in`: parquet's column-index filter widens an `in` to
+  * the range [min key, max key] and decodes every page between, while
+  * each `eq` keeps only the pages of its key. IndexBuilder.PageOptions
+  * writes pages of a few rows, so a few keys decode a few pages; the rows
+  * a page holds beside a wanted one are dropped on the raw key before
+  * they are built into results.
   *
   * A call reads its files in parallel, as one fold per file on a shared
   * daemon pool of one thread per driver core (a one-file table is read
@@ -127,21 +134,42 @@ private[engine] class LocalIndex(spark: SparkSession,
   }
 
   private val postingTable = new Table(postings, Seq("term", "blocks"))
-  private lazy val postingEncoder = ExpressionEncoder[PostingRun]()
-    .resolveAndBind(DataTypeUtils.toAttributes(postingTable.schema))
+
+  /** A posting run built straight from a row of the postings schema. */
+  private lazy val postingRun: InternalRow => PostingRun = {
+    val schema = postingTable.schema
+    val Seq(term, bucket, df, cf, maxTfNorm, blocks) =
+      Seq("term", "bucket", "df", "cf", "maxTfNorm", "blocks")
+        .map(schema.fieldIndex)
+    val block = schema(blocks).dataType.asInstanceOf[ArrayType].elementType
+      .asInstanceOf[StructType]
+    val Seq(first, last, maxTf, bMaxTfNorm, minNormId, n, bytes) =
+      Seq("firstDocId", "lastDocId", "maxTf", "maxTfNorm", "minNormId", "n",
+        "bytes").map(block.fieldIndex)
+    row => {
+      val bs = row.getArray(blocks)
+      PostingRun(row.getUTF8String(term).toString, row.getInt(bucket),
+        row.getLong(df), row.getLong(cf), row.getFloat(maxTfNorm),
+        ArraySeq.unsafeWrapArray(Array.tabulate(bs.numElements()) { i =>
+          val b = bs.getStruct(i, block.size)
+          Block(b.getLong(first), b.getLong(last), b.getInt(maxTf),
+            b.getFloat(bMaxTfNorm), b.getInt(minNormId), b.getInt(n),
+            b.getBinary(bytes))
+        }))
+    }
+  }
 
   /** Every posting run of `terms`, in file order. */
   def postingRuns(terms: Iterable[String]): Array[PostingRun] = {
-    val keys = terms.iterator.map(UTF8String.fromString).toSet
-    if (keys.isEmpty) return Array.empty
+    val distinct = terms.toSeq.distinct
+    if (distinct.isEmpty) return Array.empty
+    val keys = distinct.map(UTF8String.fromString).toSet
     val termIdx = postingTable.schema.fieldIndex("term")
-    postingTable.fold(postingTable.schema, FilterApi.in(
-        FilterApi.binaryColumn("term"),
-        terms.iterator.map(Binary.fromString).toSet.asJava)) { rows =>
-      // a deserializer holds mutable state: one per fold
-      val decode = postingEncoder.createDeserializer()
+    val key = anyOf(distinct.map(t =>
+      FilterApi.eq(FilterApi.binaryColumn("term"), Binary.fromString(t))))
+    postingTable.fold(postingTable.schema, key) { rows =>
       rows.collect { case row if keys.contains(row.getUTF8String(termIdx)) =>
-        decode(row.copy())
+        postingRun(row)
       }.toArray
     }.flatten.toArray
   }
@@ -161,8 +189,9 @@ private[engine] class LocalIndex(spark: SparkSession,
       if (row.isNullAt(i)) null else row.getUTF8String(i).toString
     val required = StructType((if (content) PageCols else MetaCols)
       .map(docTable.schema(_)))
-    docTable.fold(required, FilterApi.in(FilterApi.longColumn("docId"),
-        ids.iterator.map(java.lang.Long.valueOf).toSet.asJava)) { rows =>
+    val key = anyOf(ids.toSeq.map(id =>
+      FilterApi.eq(FilterApi.longColumn("docId"), java.lang.Long.valueOf(id))))
+    docTable.fold(required, key) { rows =>
       perFile(rows.filter(row => ids.contains(row.getLong(0))).map(row =>
         PageRow(row.getLong(0), 0f, str(row, 1), str(row, 2), str(row, 3),
           if (content) str(row, 4) else null,
@@ -191,8 +220,19 @@ private[engine] object LocalIndex {
       })
   }
 
+  /** A balanced OR of `keys` (at least one): a tree of depth log2 of their
+    * number, which parquet's filters walk recursively.
+    */
+  private def anyOf(keys: Seq[FilterPredicate]): FilterPredicate =
+    if (keys.size == 1) keys.head
+    else {
+      val (l, r) = keys.splitAt(keys.size / 2)
+      FilterApi.or(anyOf(l), anyOf(r))
+    }
+
   /** A parquet file of an index table, opened once: the input file of its
-    * listed status, and its footer, read here.
+    * listed status, its footer, read here, and its row groups' page
+    * indexes, each read on first use.
     */
   private final class OpenFile(status: FileStatus, base: Configuration) {
     private val file = HadoopInputFile.fromStatus(status, base)
@@ -203,23 +243,63 @@ private[engine] object LocalIndex {
       finally in.close()
     }
     val rowCount: Long = footer.getBlocks.asScala.map(_.getRowCount).sum
+    /** By each row group's starting position. */
+    private val pageIndexes: Map[Long, PageIndexes] = footer.getBlocks.asScala
+      .map(b => b.getStartingPos -> new PageIndexes(b)).toMap
 
     /** `perFile` of the rows of the columns `conf` requests (readConf)
       * in the pages that may hold `key`, from a reader open for the call.
       */
     def read[A](conf: Configuration, key: FilterCompat.Filter)
                (perFile: Iterator[InternalRow] => A): A = {
-      // skipping is on whatever the session's conf says
+      // skipping is on whatever the session's conf says. Vectored reads
+      // are off: a read of a few keys is many small page ranges, and a
+      // vectored read of them cost more than a seek and read per range
+      // (100 docIds with content over the 5000 docs of an sf0.1 index,
+      // warm: 6.5 ms vectored, 3.0 ms not)
       val options = HadoopReadOptions.builder(conf, status.getPath)
         .withRecordFilter(key).useStatsFilter(true)
-        .useDictionaryFilter(true).useColumnIndexFilter(true).build()
+        .useDictionaryFilter(true).useColumnIndexFilter(true)
+        .withUseHadoopVectoredIo(false).build()
       val in = file.newStream()
       val reader =
-        try ParquetFileReader.open(file, footer, options, in)
+        try new ParquetFileReader(file, footer, options, in) {
+          // `i` counts the row groups the statistics and dictionary
+          // filters left
+          override def getColumnIndexStore(i: Int): ColumnIndexStore =
+            pageIndexes(getRowGroups.get(i).getStartingPos).store(this)
+        }
         catch { case e: Throwable => in.close(); throw e }
       try perFile(rows(reader, conf))
       finally reader.close()
     }
+  }
+
+  /** The page indexes of a row group's columns, each read once, by the
+    * first reader that asks for it, and kept.
+    */
+  private final class PageIndexes(block: BlockMetaData) {
+    private val chunks: Map[ColumnPath, ColumnChunkMetaData] =
+      block.getColumns.asScala.map(c => c.getPath -> c).toMap
+    private val columnIndexes =
+      new ConcurrentHashMap[ColumnPath, Option[ColumnIndex]]()
+    private val offsetIndexes = new ConcurrentHashMap[ColumnPath, OffsetIndex]()
+
+    /** The indexes, reading those not yet kept through `reader`. */
+    def store(reader: ParquetFileReader): ColumnIndexStore =
+      new ColumnIndexStore {
+        def getColumnIndex(c: ColumnPath): ColumnIndex =
+          chunks.get(c).flatMap(chunk => columnIndexes.computeIfAbsent(c,
+            _ => Option(reader.readColumnIndex(chunk)))).orNull
+        // a file written without page indexes: the filter keeps every
+        // row, as it does over parquet's own store
+        def getOffsetIndex(c: ColumnPath): OffsetIndex = {
+          val chunk = chunks.get(c)
+            .filter(_.getOffsetIndexReference != null)
+            .getOrElse(throw new ColumnIndexStore.MissingOffsetIndexException(c))
+          offsetIndexes.computeIfAbsent(c, _ => reader.readOffsetIndex(chunk))
+        }
+      }
   }
 
   /** `base` set up for Spark's parquet row converter to read `required`:
@@ -242,9 +322,9 @@ private[engine] object LocalIndex {
 
   /** The rows of the pages `reader` keeps, as Spark's parquet row
     * converter materializes them: one mutable row, reused. Rows are not
-    * filtered one by one here: parquet's record-level `in` compares a
-    * key with every wanted key in turn, and the callers' raw-key filter
-    * does the same with one hash lookup.
+    * filtered one by one here: parquet's record-level filter walks the
+    * OR of `eq` for every row, and the callers' raw-key filter does the
+    * same with one hash lookup.
     */
   private def rows(reader: ParquetFileReader,
                    conf: Configuration): Iterator[InternalRow] = {

@@ -31,20 +31,21 @@ case class Hit(docId: Long, score: Float)
   *     the ≤k winners' docs rows (for a regex, its candidates' rows in
   *     rank order until k pass) are read in the driver through Spark's
   *     parquet reader, and the same per-bucket scoreBucket runs over them
-  *     — no Spark job. Each read pushes an `In` filter on `term` /
-  *     `docId` into the parquet reader, which skips the row groups and
-  *     pages whose min/max cannot hold a wanted key, and reads the files
-  *     in parallel; postings and content are never cached in the driver.
+  *     — no Spark job. Each read pushes an OR of one `eq` per wanted
+  *     `term` / `docId` into the parquet reader, which skips the row
+  *     groups and pages whose min/max cannot hold a wanted key, and reads
+  *     the files in parallel; postings and content are never cached in
+  *     the driver (LocalIndex).
   *
   * Scale notes: the postings scan prunes on the `term` column by page.
   * Files are hash-partitioned on (term, bucket), so a file's row group
   * spans every term and its min/max prunes nothing, but each file is
   * sorted by term and written in small pages (IndexBuilder.PageOptions),
-  * so a reader with the `In` filter skips every page whose term range
-  * misses the query's terms (measured on the driver-local read). Dict
-  * lookups collect only the ≤dozens of query-term rows to the driver, and
-  * the score aggregation shuffles only candidate postings, never the
-  * index.
+  * so a reader with the per-term filter skips every page whose term
+  * range misses the query's terms (measured on the driver-local read).
+  * Dict lookups collect only the ≤dozens of query-term rows to the
+  * driver, and the score aggregation shuffles only candidate postings,
+  * never the index.
   */
 class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
   import spark.implicits._

@@ -550,7 +550,8 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
     // docs and lineage: plain unions — ids preserved
     mergeStage("docs") {
       spark.read.parquet(gens.map(g => s"$g/docs"): _*)
-        .write.options(IndexBuilder.PageOptions).parquet(s"$mergedPath/docs")
+        .write.options(IndexBuilder.PageOptions.docs)
+        .parquet(s"$mergedPath/docs")
       val linDirs = gens.map(g => s"$g/lineage").filter(FsUtil.exists)
       if (linDirs.nonEmpty)
         spark.read.parquet(linDirs: _*).write.parquet(s"$mergedPath/lineage")
@@ -566,7 +567,7 @@ class IncrementalIndexer(@transient val spark: SparkSession, root: String,
         }
         .sortWithinPartitions($"term") // keep the sorted-by-term write
         // property the row-group min/max pruning relies on (PlanSpec)
-        .write.options(IndexBuilder.PageOptions)
+        .write.options(IndexBuilder.PageOptions.postings)
         .parquet(s"$mergedPath/postings")
     }
     mergeStage("dict") {

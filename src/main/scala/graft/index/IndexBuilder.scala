@@ -192,7 +192,7 @@ class IndexBuilder(
       .observe(obs,
         sum(when($"indexed", 1L).otherwise(0L)).as("n"),
         sum(when($"indexed", $"docLen").otherwise(0L)).as("t"))
-      .write.options(PageOptions).mode("overwrite").parquet(docsPath)
+      .write.options(PageOptions.docs).mode("overwrite").parquet(docsPath)
     writeLineage(lin)
     val row = obs.get
     val n = Option(row("n")).fold(0L)(_.asInstanceOf[Long])
@@ -327,7 +327,8 @@ class IndexBuilder(
       .mapPartitions(it =>
         new GramPhase1Iterator(it, bNormCache.value, bs, shortG, stubs = true))
     mergePhase(strPartials.union(gramPartials).union(stubPartials))
-      .write.options(PageOptions).mode("overwrite").parquet(postingsPath)
+      .write.options(PageOptions.postings).mode("overwrite")
+      .parquet(postingsPath)
     writeLineage(lin)
   }
 
@@ -417,30 +418,48 @@ object IndexBuilder {
   val FormatVersion = "graft-index-v11"
 
   /** Parquet page bounds of the `docs` and `postings` writes (the build's
-    * stages and IncrementalIndexer.mergeDeltas): small pages, so that the
-    * key filter of a driver-local read (engine.LocalIndex) skips every
-    * page of a file's sorted key column that cannot hold a wanted key
-    * and decodes only the rows of the pages left, in every column.
-    * Parquet's defaults (1 MB, 20000 rows) made each postings file of a
-    * 1000-file index one or two pages, decoded whole by every read.
-    * Readers need no setting: the bounds change the layout, not the
-    * FORMAT, and an index written without them reads the same rows,
-    * only slower.
+    * stages and IncrementalIndexer.mergeDeltas), one set per table: pages
+    * of a few rows, so that the per-key filter of a driver-local read
+    * (engine.LocalIndex) skips every page of a file's sorted key column
+    * that cannot hold a wanted key and decodes only the rows of the pages
+    * left, in every column. Readers need no setting: the bounds change
+    * the layout, not the FORMAT, and an index written without them reads
+    * the same rows, only slower.
     *
-    * Measured grid (a 1000-file index of the benchmark's generator, two
-    * seeds, each variant's files rewritten from the same build, reads
-    * in parallel, `local[4]` on a 4-core host; median of 5 and 9 warm
-    * reps): one-term postingRuns 9.2–10.4 ms at 1 MB / 20000 rows,
-    * 8.0–8.7 at 32 KB / 2048, 5.6–6.7 at 16 KB / 1024, 5.6–6.0 at
-    * 8 KB / 512, 5.6–5.9 at 4 KB / 256; postings bytes +1%, +4–5%,
-    * +6–7%, +9–10% over the default. The benchmark's query mix ran
-    * 21.0–22.8 → 19.2–19.8 ms (median over all classes) at 8 KB / 512,
-    * no better at smaller pages; the docs reads moved by less than their
-    * noise at every size.
+    * Parquet checks a page's size only every `row.check.min` rows (100 by
+    * default), so a byte bound alone cuts no page before its 100th row:
+    * docs content pages of an 8 KB bound held about 100 rows (~128 KB),
+    * and reading 7 docIds assembled 992 of an index's 1000 docs rows.
+    * Both tables therefore check after every row (min 1, max 16) and
+    * bound the rows per page.
+    *
+    * Docs pages hold at most 16 rows, so a regex verify or a page of
+    * winners decodes a few small pages per docId (the docId column's
+    * pages set the row ranges every column decodes; at 64 rows codebench
+    * `search` op p50 went 6.56 → 8.11 ms, seeds 1801–1804, slower in
+    * 4 of 4, the `page` class 5.5 → 8.0 ms). Postings pages hold at
+    * most 128 rows, chosen from a grid measured with the page indexes
+    * cached per Searcher (engine.LocalIndex; uncached, each call re-read
+    * them, and smaller pages measured slower) and vectored reads still
+    * on: codebench `search` on this
+    * layout's 1000-file index, seeds 1602–1606, `local[4]` on a 4-core
+    * host, op p50 median of 5 runs and index bytes per content byte —
+    * 64 rows 8.53 ms, 3.50; 128 rows 8.48 ms, 3.21; 256 rows 9.41 ms,
+    * 3.13; the earlier reader and layout (an `in` filter, page indexes
+    * re-read per call, 8 KB / 512-row pages checked every ≥100 rows)
+    * 11.3–11.7 ms, 2.80–2.86 (2 seeds). 128 is the smallest index that
+    * keeps the gain.
     */
-  val PageOptions: Map[String, String] = Map(
-    "parquet.page.size" -> (8 << 10).toString,
-    "parquet.page.row.count.limit" -> "512")
+  object PageOptions {
+    private def bounded(rows: Int): Map[String, String] = Map(
+      "parquet.page.size" -> (8 << 10).toString,
+      "parquet.page.row.count.limit" -> rows.toString,
+      "parquet.page.size.row.check.min" -> "1",
+      "parquet.page.size.row.check.max" -> "16")
+
+    val docs: Map[String, String] = bounded(16)
+    val postings: Map[String, String] = bounded(128)
+  }
 
   /** Namespace bit for packed trigram codes: set = "p:" (path), clear =
     * "g:" (content). Codes use 48 low bits (3 UTF-16 chars).

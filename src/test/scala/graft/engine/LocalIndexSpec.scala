@@ -8,8 +8,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, FileSystem,
-  Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, FileStatus,
+  FileSystem, Path, RawLocalFileSystem}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
@@ -23,9 +23,10 @@ import graft.util.FsUtil
 
 /** A local file system under the `trackfs:` scheme that counts the bytes
   * its input streams read (vectored reads included) and the streams it
-  * opens and closes, per file name the streams opened and the streams
-  * that read any of the file's last 8 bytes (parquet's footer length and
-  * magic: one footer read), and fails to open the files named in
+  * opens and closes, per file name the streams opened, the streams that
+  * read any of the file's last 8 bytes (parquet's footer length and
+  * magic: one footer read) and the streams that read any byte of the
+  * file's range in `regions`, and fails to open the files named in
   * `poisoned`.
   */
 class TrackingFs extends RawLocalFileSystem {
@@ -38,14 +39,22 @@ class TrackingFs extends RawLocalFileSystem {
     TrackingFs.opened.incrementAndGet()
     TrackingFs.count(TrackingFs.opens, f.getName)
     val tail = file.length() - 8
+    val region = TrackingFs.regions.get(f.getName)
     val counted = new FSInputStream {
       private var closed = false
       private var footer = false
-      private def touched(pos: Long, n: Int): Unit =
+      private var inRegion = false
+      private def touched(pos: Long, n: Int): Unit = {
         if (!footer && pos + n > tail) {
           footer = true
           TrackingFs.count(TrackingFs.footerReads, f.getName)
         }
+        for ((start, end) <- region
+             if !inRegion && pos < end && pos + n > start) {
+          inRegion = true
+          TrackingFs.count(TrackingFs.regionReads, f.getName)
+        }
+      }
       override def seek(pos: Long): Unit = file.seek(pos)
       override def getPos: Long = file.getFilePointer
       override def seekToNewSource(pos: Long): Boolean = false
@@ -85,13 +94,17 @@ object TrackingFs {
   val opens = new ConcurrentHashMap[String, AtomicInteger]()
   /** Streams that read the file's footer, by file name. */
   val footerReads = new ConcurrentHashMap[String, AtomicInteger]()
+  /** Byte ranges [start, end) watched, by file name. */
+  @volatile var regions = Map.empty[String, (Long, Long)]
+  /** Streams that read any byte of the file's watched range, by file name. */
+  val regionReads = new ConcurrentHashMap[String, AtomicInteger]()
   @volatile var poisoned = Set.empty[String]
 
   private def count(m: ConcurrentHashMap[String, AtomicInteger],
                     name: String): Unit =
     m.computeIfAbsent(name, _ => new AtomicInteger()).incrementAndGet()
 
-  /** The count of `name` in `m` (opens or footerReads). */
+  /** The count of `name` in `m` (opens, footerReads or regionReads). */
   def of(m: ConcurrentHashMap[String, AtomicInteger], name: String): Int =
     Option(m.get(name)).fold(0)(_.get)
 
@@ -108,11 +121,13 @@ object TrackingFs {
   * files of many row groups, where parquet skips the row groups that
   * cannot hold a wanted key — and the local regex verify reads its
   * candidates in rank order, stopping once k pass. The index writes
-  * small pages, so a one-term read decodes a small part of the postings;
-  * the per-file reads of a call run in parallel, concurrent callers get
-  * the sequential answers, and a failed file read reaches the caller with
-  * every reader closed. A table is opened once: each file's footer is read
-  * once per Searcher, and a file of zero rows is never read again.
+  * small pages, so a one-term or few-docId read decodes a small part of
+  * a table, and a read of a file's first and last key decodes their
+  * pages, not the ones between; the per-file reads of a call run in
+  * parallel, concurrent callers get the sequential answers, and a failed
+  * file read reaches the caller with every reader closed. A table is
+  * opened once: each file's footer and page indexes are read once per
+  * Searcher, and a file of zero rows is never read again.
   */
 class LocalIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -195,6 +210,10 @@ class LocalIndexSpec extends AnyFunSuite {
       ids.grouped(7).map(_.head).toSet)
   }
 
+  /** The parquet files of the table directory `dir`. */
+  private def parquetFiles(dir: String): Seq[FileStatus] =
+    FsUtil.list(dir).filter(_.getPath.getName.endsWith(".parquet"))
+
   /** Bytes read from local files so far, over every thread. */
   private def bytesRead(): Long =
     FileSystem.getGlobalStorageStatistics.iterator.asScala
@@ -237,8 +256,7 @@ class LocalIndexSpec extends AnyFunSuite {
     val li = new LocalIndex(spark,
       spark.read.parquet(s"${TrackingFs.root(spark, root)}/postings"),
       searcher.docs)
-    val size = FsUtil.list(s"$root/postings")
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    val size = parquetFiles(s"$root/postings").map(_.getLen).sum
     val b0 = TrackingFs.bytesRead.get
     assert(li.postingRuns(Seq(term)).map(_.term).toSeq == Seq(term))
     (TrackingFs.bytesRead.get - b0, size)
@@ -249,7 +267,24 @@ class LocalIndexSpec extends AnyFunSuite {
     assert(read * 5 < size, s"one term read $read of $size postings bytes")
   }
 
-  test("a one-term postings read of a mergeDeltas generation reads a small part of its bytes") {
+  /** The bytes a docRows with content over the docs of the index at
+    * `root` reads, for 3 docIds spread over its largest docs file, and the
+    * bytes of that file.
+    */
+  private def fewDocsRead(root: String): (Long, Long) = {
+    val file = parquetFiles(s"$root/docs").maxBy(_.getLen)
+    val ids = spark.read.parquet(file.getPath.toString).select("docId")
+      .collect().map(_.getLong(0)).sorted
+    val few = Seq(ids.size / 4, ids.size / 2, ids.size * 3 / 4).map(ids).toSet
+    val li = new LocalIndex(spark, searcher.postings,
+      spark.read.parquet(s"${TrackingFs.root(spark, root)}/docs"))
+    val b0 = TrackingFs.bytesRead.get
+    assert(li.docRows(few, content = true).keySet == few)
+    (TrackingFs.bytesRead.get - b0, file.getLen)
+  }
+
+  /** The generation mergeDeltas wrote from two ingested deltas. */
+  lazy val merged: String = {
     val root = TestSpark.tempDir("localindex-merge")
     val inc = new IncrementalIndexer(spark, root, bucketSize = 16)
     inc.buildBase(CorpusGen.synth(spark, 2, 10, seed = 6L))
@@ -258,8 +293,98 @@ class LocalIndexSpec extends AnyFunSuite {
         .withColumn("repo", concat(lit(s"d$seed-"), col("repo"))))
     inc.mergeDeltas()
     assert(inc.generations().size == 2)
-    val (read, size) = oneTermRead(inc.deltaPath(1))
+    inc.deltaPath(1)
+  }
+
+  test("a one-term postings read of a mergeDeltas generation reads a small part of its bytes") {
+    val (read, size) = oneTermRead(merged)
     assert(read * 5 < size, s"one term read $read of $size postings bytes")
+  }
+
+  test("a few-docId docs read of a mergeDeltas generation reads a small part of its docs file") {
+    val (read, size) = fewDocsRead(merged)
+    assert(read * 3 < size,
+      s"3 docIds read $read bytes, their docs file holds $size")
+  }
+
+  /** The bytes each of `reads` reads, after one unmeasured run of each
+    * (which opens the tables and reads the page indexes they use).
+    */
+  private def bytesOf(reads: (() => Any)*): Seq[Long] = {
+    reads.foreach(_())
+    reads.map { r =>
+      val b0 = TrackingFs.bytesRead.get
+      r()
+      TrackingFs.bytesRead.get - b0
+    }
+  }
+
+  test("a read of a file's first and last key reads their pages, not every page between") {
+    val root = TrackingFs.root(spark, searcher.indexRoot)
+    def largest(table: String): DataFrame = spark.read.parquet(
+      s"$root/$table/" + parquetFiles(s"${searcher.indexRoot}/$table")
+        .maxBy(_.getLen).getPath.getName)
+    val postings = largest("postings")
+    val docs = largest("docs")
+    val li = new LocalIndex(spark, postings, docs)
+    // in file order
+    val terms = postings.select("term").collect().map(_.getString(0)).toSeq
+    val ids = docs.select("docId").collect().map(_.getLong(0)).toSeq
+    val ends = Seq(terms.head, terms.last)
+    val endIds = Set(ids.head, ids.last)
+    assert(terms.size > 1000 && ids.size > 64, (terms.size, ids.size))
+    assert(li.postingRuns(ends).map(_.term).toSet == ends.toSet)
+    assert(li.docRows(endIds, content = true).keySet == endIds)
+    val Seq(allRuns, endRuns, allDocs, endDocs) = bytesOf(
+      () => li.postingRuns(terms), () => li.postingRuns(ends),
+      () => li.docRows(ids.toSet, content = true),
+      () => li.docRows(endIds, content = true))
+    assert(endRuns * 5 < allRuns,
+      s"first and last term read $endRuns bytes, every term $allRuns")
+    assert(endDocs * 3 < allDocs,
+      s"first and last docId read $endDocs bytes, every docId $allDocs")
+  }
+
+  /** The byte range [start, end) of the page indexes of the parquet file
+    * `f`: every column and offset index its footer points to.
+    */
+  private def pageIndexRange(f: FileStatus): (Long, Long) = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()))
+    try {
+      val refs = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .flatMap(c => Seq(c.getColumnIndexReference, c.getOffsetIndexReference))
+      assert(refs.forall(_ != null), f.getPath)
+      (refs.map(_.getOffset).min, refs.map(i => i.getOffset + i.getLength).max)
+    } finally r.close()
+  }
+
+  test("one LocalIndex reads each file's page indexes once over many reads") {
+    val files = Seq("postings", "docs").map(t =>
+      t -> parquetFiles(s"${searcher.indexRoot}/$t").filter(rowCount(_) > 0))
+      .toMap
+    assert(files.values.forall(_.size > 1))
+    def firstOf(f: FileStatus, column: String): Any =
+      spark.read.parquet(f.getPath.toString).select(column).head().get(0)
+    // a key of every file, so each read decodes a page of every file
+    val terms = files("postings").map(firstOf(_, "term").asInstanceOf[String])
+    val ids = files("docs").map(firstOf(_, "docId").asInstanceOf[Long]).toSet
+    val names = files.values.flatten.map(_.getPath.getName).toSeq
+    TrackingFs.regions = files.values.flatten
+      .map(f => f.getPath.getName -> pageIndexRange(f)).toMap
+    try {
+      val root = TrackingFs.root(spark, searcher.indexRoot)
+      val li = new LocalIndex(spark, spark.read.parquet(s"$root/postings"),
+        spark.read.parquet(s"$root/docs"))
+      val before = names.map(TrackingFs.of(TrackingFs.regionReads, _))
+      for (_ <- 1 to 20) {
+        assert(li.postingRuns(terms).map(_.term).toSet == terms.toSet)
+        assert(li.docRows(ids, content = true).keySet == ids)
+      }
+      val reads = names.map(TrackingFs.of(TrackingFs.regionReads, _))
+        .zip(before).map { case (a, b) => a - b }
+      assert(reads.forall(_ == 1), names.zip(reads))
+    } finally TrackingFs.regions = Map.empty
   }
 
   test("a per-file read that throws reaches the caller, with every reader closed") {
@@ -273,8 +398,8 @@ class LocalIndexSpec extends AnyFunSuite {
     assert(TrackingFs.opened.get > 0)
     assert(TrackingFs.opened.get == TrackingFs.closed.get)
     def names(table: String): Seq[String] =
-      FsUtil.list(s"${searcher.indexRoot}/$table").map(_.getPath.getName)
-        .filter(_.endsWith(".parquet")).sorted
+      parquetFiles(s"${searcher.indexRoot}/$table").map(_.getPath.getName)
+        .sorted
     def poisonedCause(e: Throwable): Boolean =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .exists(c => c.isInstanceOf[IOException] &&
@@ -300,7 +425,7 @@ class LocalIndexSpec extends AnyFunSuite {
   }
 
   /** The number of rows the footer of `f` counts. */
-  private def rowCount(f: org.apache.hadoop.fs.FileStatus): Long = {
+  private def rowCount(f: FileStatus): Long = {
     val r = ParquetFileReader.open(
       HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()))
     try r.getRecordCount
@@ -312,8 +437,7 @@ class LocalIndexSpec extends AnyFunSuite {
     searcher.docs.repartition(2).write.parquet(s"$dir/docs")
     // an empty frame still writes one part file, holding no rows
     searcher.docs.limit(0).write.mode("append").parquet(s"$dir/docs")
-    val files = FsUtil.list(s"$dir/docs")
-      .filter(_.getPath.getName.endsWith(".parquet"))
+    val files = parquetFiles(s"$dir/docs")
     val (empty, full) = files.partition(rowCount(_) == 0)
     assert(empty.size == 1 && full.size == 2, files.map(_.getPath))
     val emptyName = empty.head.getPath.getName
@@ -340,8 +464,7 @@ class LocalIndexSpec extends AnyFunSuite {
     tracked.termStats(Seq("parse"))
     assert(tracked.dictCached)
     val names = Seq("postings", "docs").flatMap(t =>
-      FsUtil.list(s"${searcher.indexRoot}/$t").map(_.getPath.getName)
-        .filter(_.endsWith(".parquet")))
+      parquetFiles(s"${searcher.indexRoot}/$t").map(_.getPath.getName))
     assert(names.size > 2)
     val before = names.map(TrackingFs.of(TrackingFs.footerReads, _))
     val qe = new QueryExecutor(tracked)
