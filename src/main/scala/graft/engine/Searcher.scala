@@ -29,13 +29,13 @@ case class Hit(docId: Long, score: Float)
   *   - driver-local (LocalIndex + LocalSearch, used by QueryExecutor for
   *     small single-branch queries): the query terms' posting runs and
   *     the ≤k winners' docs rows (for a regex, its candidates' rows in
-  *     rank order until k pass) are read in the driver through Spark's
-  *     parquet reader, and the same per-bucket scoreBucket runs over them
-  *     — no Spark job. Each read pushes an OR of one `eq` per wanted
-  *     `term` / `docId` into the parquet reader, which skips the row
-  *     groups and pages whose min/max cannot hold a wanted key, and reads
-  *     the files in parallel; postings and content are never cached in
-  *     the driver (LocalIndex).
+  *     rank order until k pass) are read in the driver by parquet-hadoop
+  *     file readers over footers and page indexes cached per Searcher,
+  *     and the same per-bucket scoreBucket runs over them — no Spark job.
+  *     Each read passes the reader an OR of one `eq` per wanted `term` /
+  *     `docId`, so it skips the row groups and pages that cannot hold a
+  *     wanted key, and the files are read in parallel; postings and
+  *     content are never cached in the driver (LocalIndex).
   *
   * Scale notes: the postings scan prunes on the `term` column by page.
   * Files are hash-partitioned on (term, bucket), so a file's row group

@@ -340,11 +340,7 @@ class IndexBuilder(
     ensureFormat()
     if (isCommitted(dictPath)) return
     ProgressReporter.inStage(spark, "dict") {
-    spark.read.parquet(postingsPath)
-      .groupBy($"term")
-      .agg(sum($"df").as("df"), sum($"cf").as("cf"),
-        max($"maxTfNorm").as("maxTfNorm"))
-      .as[DictEntry]
+    DictEntry.aggregate(spark.read.parquet(postingsPath))
       .write.mode("overwrite").parquet(dictPath)
     }
   }

@@ -1,5 +1,8 @@
 package graft.index
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{max, sum}
+
 /** Index artifact schemas (FIXTURES.md §2). All tables are plain parquet
   * directories under an index root:
   *
@@ -76,6 +79,20 @@ case class PostingRun(
 /** Global per-term stats (term dictionary). */
 case class DictEntry(term: String, df: Long, cf: Long, maxTfNorm: Float)
 
+object DictEntry {
+  /** Per-term dict over rows carrying (term, df, cf, maxTfNorm): posting
+    * runs, or the dicts of several generations. df and cf sum, maxTfNorm
+    * maxes.
+    */
+  def aggregate(rows: DataFrame): Dataset[DictEntry] = {
+    import rows.sparkSession.implicits._
+    rows.groupBy($"term")
+      .agg(sum($"df").as("df"), sum($"cf").as("cf"),
+        max($"maxTfNorm").as("maxTfNorm"))
+      .as[DictEntry]
+  }
+}
+
 /** Corpus-level scoring stats: n docs, total tokens, avgdl = total/n.
   * bucketSize is the build's docId-range bucket width — stored so
   * query-time operators (e.g. the tombstone cogroup WAND) can re-derive a
@@ -83,6 +100,20 @@ case class DictEntry(term: String, df: Long, cf: Long, maxTfNorm: Float)
   */
 case class IndexStats(n: Long, totalTokens: Long, avgdl: Double,
                       bucketSize: Long)
+
+object IndexStats {
+  /** Stats of the union of generations: n and totalTokens sum. Their
+    * posting buckets only merge at one bucketSize, so they must agree.
+    */
+  def merge(parts: Seq[IndexStats]): IndexStats = {
+    val n = parts.map(_.n).sum
+    val t = parts.map(_.totalTokens).sum
+    val bs = parts.map(_.bucketSize).distinct
+    require(bs.size == 1,
+      s"generations disagree on bucketSize: $bs — cannot merge buckets")
+    IndexStats(n, t, if (n == 0) 0.0 else t.toDouble / n, bs.head)
+  }
+}
 
 /** Per-stage per-partition lineage + metrics row (SURVEY §4.5): enables
   * resume-after-failure audit and is the scale observability surface.

@@ -38,8 +38,8 @@ class MultiSearcher(spark0: SparkSession, generations: Seq[String],
                       * path on small corpora.
                       */
                     val TombstoneShipMax: Long = 2000000L,
-                    /** Live repo-name sub-index location (IncrementalIndexer
-                      * refreshes it out of band of the generations).
+                    /** Live repo-name sub-index location (the one an
+                      * IncrementalIndexer manifest names).
                       */
                     repoIndexPath: Option[String] = None)
     extends Searcher(spark0, generations.head) {
@@ -72,22 +72,11 @@ class MultiSearcher(spark0: SparkSession, generations: Seq[String],
       .as[PostingRun]
 
   override lazy val dict: Dataset[DictEntry] =
-    spark0.read.parquet(generations.map(g => s"$g/dict"): _*)
-      .groupBy($"term")
-      .agg(sum($"df").as("df"), sum($"cf").as("cf"),
-        max($"maxTfNorm").as("maxTfNorm"))
-      .as[DictEntry]
+    DictEntry.aggregate(spark0.read.parquet(generations.map(g => s"$g/dict"): _*))
 
-  override lazy val stats: IndexStats = {
-    val parts = generations.map(g =>
-      spark0.read.parquet(s"$g/stats").as[IndexStats].head())
-    val n = parts.map(_.n).sum
-    val t = parts.map(_.totalTokens).sum
-    val bs = parts.map(_.bucketSize).distinct
-    require(bs.size == 1,
-      s"generations disagree on bucketSize: $bs — cannot merge buckets")
-    IndexStats(n, t, if (n == 0) 0.0 else t.toDouble / n, bs.head)
-  }
+  override lazy val stats: IndexStats = IndexStats.merge(
+    spark0.read.parquet(generations.map(g => s"$g/stats"): _*)
+      .as[IndexStats].collect().toSeq)
 
   override lazy val docs: DataFrame =
     spark0.read.parquet(generations.map(g => s"$g/docs"): _*)

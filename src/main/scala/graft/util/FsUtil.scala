@@ -1,14 +1,12 @@
 package graft.util
 
-import java.io.{FileNotFoundException, IOException}
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.util.Using
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
-import org.apache.hadoop.fs.permission.FsAction
-import org.apache.hadoop.security.AccessControlException
 import org.apache.spark.sql.SparkSession
 
 /** The one filesystem layer of the index commit protocol. Each path
@@ -16,23 +14,23 @@ import org.apache.spark.sql.SparkSession
   * under the session's Hadoop conf, as Spark resolves the data, so a
   * `file:`, `hdfs:` or bare root keeps its markers beside its data.
   *
-  * The protocol:
+  * The protocol writes new directories, then creates one manifest:
   *   - a stage dir is committed iff Spark's job commit wrote `_SUCCESS` in
-  *     it (isCommitted); resume skips committed stages;
+  *     it (isCommitted); IndexBuilder's resume skips committed stages;
   *   - FORMAT gate: `<root>/FORMAT` names the layout; a build over another
   *     one wipes the root, a reader refuses it (IVF dirs use SPEC likewise);
-  *   - versioned dirs `tombstones-N` / `repoIndex-N`: the highest committed
-  *     N is live, older ones are removed after it commits;
-  *   - intent markers TOMBSTONE_INTENT / REPO_REFRESH_INTENT are written
-  *     before a mutation and deleted after it; a survivor says what to heal;
-  *   - MERGING / COMPACTING are commit points, after which finishMerge and
-  *     finishCompaction delete the old dirs and rename `delta-merged` →
-  *     `delta-1` and `base-new` → `base`.
+  *   - an incremental root (IncrementalIndexer) commits each state by
+  *     creating `manifest-N` with createNew. Nothing is renamed.
   *
-  * Those two renames assume an atomic directory rename. Local disks and
-  * HDFS give it; object stores (S3, GCS) copy then delete, so a crash there
-  * can leave a half-copied generation. They would need a commit-pointer
-  * file, which this layout does not have.
+  * createNew is the one primitive that commit needs: a create that
+  * refuses an existing path. HDFS makes it atomic (the NameNode refuses a
+  * second create of a path). The local filesystem checks for the path,
+  * then creates it, and so does an object-store connector that does not
+  * use the store's conditional write, so two writers there could both
+  * create the same manifest; the single-writer contract of
+  * IncrementalIndexer covers those stores. An object store shows a file
+  * only once its upload completes; on a disk or HDFS a crash can leave a
+  * torn manifest, which its closing line exposes.
   */
 object FsUtil {
 
@@ -57,17 +55,26 @@ object FsUtil {
     } catch { case _: FileNotFoundException => None }
   }
 
-  /** Create or overwrite a marker, creating missing parent dirs. Written
-    * without a `.crc` side file, so a marker stays a plain text file that
-    * can be edited by hand without failing a checksum on the next read.
+  /** Create or overwrite a marker, creating missing parent dirs. */
+  def writeMarker(path: String, text: String): Unit = write(path, text, overwrite = true)
+
+  /** Create `path` holding `text`, creating missing parent dirs; an
+    * existing path is refused with an IOException and left as it was.
     */
-  def writeMarker(path: String, text: String): Unit = withFs(path) { (fs, p) =>
-    val plain = fs match {
-      case c: ChecksumFileSystem => c.getRawFileSystem
-      case other => other
+  def createNew(path: String, text: String): Unit = write(path, text, overwrite = false)
+
+  /** Written without a `.crc` side file, so a marker stays a plain text
+    * file that can be edited by hand without failing a checksum on the
+    * next read.
+    */
+  private def write(path: String, text: String, overwrite: Boolean): Unit =
+    withFs(path) { (fs, p) =>
+      val plain = fs match {
+        case c: ChecksumFileSystem => c.getRawFileSystem
+        case other => other
+      }
+      Using.resource(plain.create(p, overwrite))(_.write(text.getBytes(UTF_8)))
     }
-    Using.resource(plain.create(p, true))(_.write(text.getBytes(UTF_8)))
-  }
 
   /** Children of `dir`; empty when it is absent. */
   def list(dir: String): Seq[FileStatus] = withFs(dir) { (fs, p) =>
@@ -76,24 +83,4 @@ object FsUtil {
 
   /** Recursive delete of a file or directory; tolerates a missing path. */
   def rmTree(path: String): Unit = withFs(path)(_.delete(_, true))
-
-  /** False when `dir` exists and this user may not write to it. */
-  def writable(dir: String): Boolean = withFs(dir) { (fs, p) =>
-    try { fs.access(p, FsAction.WRITE); true } catch {
-      case _: FileNotFoundException => true
-      case _: AccessControlException => false
-    }
-  }
-
-  /** Rename that THROWS on failure instead of returning false — silent
-    * rename failures around directory swaps are how index generations get
-    * lost. An existing target is refused: Hadoop would move `from` inside
-    * it.
-    */
-  def renameOrThrow(from: String, to: String): Unit =
-    withFs(from) { (fs, src) =>
-      val dst = new Path(to)
-      if (fs.exists(dst) || !fs.rename(src, dst))
-        throw new IOException(s"rename failed: $from -> $to")
-    }
 }
