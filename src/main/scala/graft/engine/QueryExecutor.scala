@@ -2,11 +2,10 @@ package graft.engine
 
 import java.util.regex.Pattern
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.DriverRowsDataset
+import org.apache.spark.sql.types.{NullType, StringType, StructField, StructType}
 
 import graft.query.QueryParser
 import graft.query.QueryParser.{ContentTarget, FlatQuery, QLit, SymbolTarget}
@@ -197,21 +196,35 @@ object QueryExecutor {
     */
   private val LocalDfMax = 40000L
 
-  /** The local path's result schemas, derived once from the encoders the
-    * Spark path's frames use (hits, executeAny rows, snippet rows).
+  /** The local path's result encoders, derived once from the encoders the
+    * Spark path's frames use (hits, executeAny rows, snippet rows, repo
+    * rows with and without highlights, and executeAny's bare-`repo:` rows,
+    * typed as Spark types that face's select over the highlighted rows:
+    * `lit("repo")` is a non-null string, `lit(null: String)` a NullType).
     */
   private val HitEncoder: Encoder[Hit] = Encoders.product[Hit]
   private val FileHitCols = Seq("kind", "id", "name", "path", "score",
     "highlights")
-  private val FileHitSchema: StructType = StructType(
+  private val FileHitEncoder: Encoder[Row] = Encoders.row(StructType(
     Encoders.product[(String, Long, String, String, Float, Seq[(Int, Int)])]
-      .schema.fields.zip(FileHitCols).map { case (f, n) => f.copy(name = n) })
-  private val SnippetSchema: StructType = Encoders.product[SnippetRow].schema
-  private val RepoSchema: StructType = Encoders.product[RepoHit].schema
+      .schema.fields.zip(FileHitCols).map { case (f, n) => f.copy(name = n) }))
+  private val SnippetEncoder: Encoder[Row] =
+    Encoders.row(Encoders.product[SnippetRow].schema)
+  private val RepoEncoder: Encoder[Row] =
+    Encoders.row(Encoders.product[RepoHit].schema)
   private val RepoHighlightSchema: StructType = StructType(
     Encoders.product[(Long, String, Float, Seq[(Int, Int)])].schema.fields
       .zip(Seq("repoId", "name", "score", "highlights"))
       .map { case (f, n) => f.copy(name = n) })
+  private val RepoHighlightEncoder: Encoder[Row] =
+    Encoders.row(RepoHighlightSchema)
+  private val RepoAnyEncoder: Encoder[Row] = Encoders.row(StructType(Seq(
+    StructField("kind", StringType, nullable = false),
+    RepoHighlightSchema("repoId").copy(name = "id"),
+    RepoHighlightSchema("name"),
+    StructField("path", NullType, nullable = true),
+    RepoHighlightSchema("score"),
+    RepoHighlightSchema("highlights"))))
 
   /** Highlight ranges of the repo patterns (regex source, case-sensitive)
     * on a repo name.
@@ -331,11 +344,14 @@ object ReaderKind {
   *   - driver-local (LocalSearch over the Searcher's LocalIndex): the
   *     query terms' posting runs and the ≤k winners' docs rows are read in
   *     the driver and scored with the Spark path's code (scoreBucket,
-  *     Snippets); the result is a LocalRelation DataFrame and runs no
-  *     Spark job. A regex, or a branch with labels, ranks every candidate
+  *     Snippets). A regex, or a branch with labels, ranks every candidate
   *     and checks their docs rows in rank order until k pass (metadata
   *     columns for labels, content for a regex); executeWithSnippets then
-  *     reads content for the ≤k winners only. Taken for:
+  *     reads content for the ≤k winners only. The result is a Dataset
+  *     over a LocalRelation of the rows built in the driver (localFrame):
+  *     its collect() returns a copy of those rows and posts no SQL
+  *     execution event; every other action plans over the LocalRelation
+  *     (a LocalTableScan). None runs a Spark job. Taken for:
   *       - exactly one DNF branch with a plain literal, a `symbol:`
   *         literal, or a regex with at least one required gram, plus any
   *         of `org:`/`repo:`/`path:`/`lang:` (checked on the docs row by
@@ -375,8 +391,8 @@ class QueryExecutor(searcher: Searcher,
     val bs = compile(input)
     localRows(bs, k, fields = false, content = false) match {
       case Some(rows) =>
-        localFrame(rows.map(r => Row(r.docId, r.score)),
-          QueryExecutor.HitEncoder.schema).as(QueryExecutor.HitEncoder)
+        localFrame(rows.map(r => Hit(r.docId, r.score)),
+          QueryExecutor.HitEncoder)
       case None => sparkTopK(bs, k)
     }
   }
@@ -385,9 +401,13 @@ class QueryExecutor(searcher: Searcher,
   private def compile(input: String): Seq[CompiledBranch] =
     QueryParser.parse(input).map(new CompiledBranch(_))
 
-  /** A local path result: a LocalRelation of `rows`. */
-  private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
-    searcher.spark.createDataFrame(rows.asJava, schema)
+  /** A local path result: a Dataset over the LocalRelation of `rows`
+    * (DriverRowsDataset). Its collect() returns a copy of the rows built
+    * here, as Spark's collect would return them, and posts no SQL
+    * execution; every other action plans over the LocalRelation.
+    */
+  private def localFrame[T](rows: Seq[T], encoder: Encoder[T]): Dataset[T] =
+    DriverRowsDataset(searcher.spark, rows, encoder)
 
   private def sparkTopK(bs: Seq[CompiledBranch], k: Int): Dataset[Hit] =
     allHits(bs).orderBy($"score".desc, $"docId".asc).limit(k)
@@ -664,7 +684,7 @@ class QueryExecutor(searcher: Searcher,
       case Some(rows) =>
         localFrame(rows.map(r =>
           Row.fromTuple(QueryExecutor.snippetRow(r, specs))),
-          QueryExecutor.SnippetSchema)
+          QueryExecutor.SnippetEncoder)
       case None =>
         searcher.docs
           .join(hitsSide(sparkTopK(bs, k).toDF(), k), "docId")
@@ -726,7 +746,7 @@ class QueryExecutor(searcher: Searcher,
     localRepo(bs, k) match {
       case Some(hits) =>
         localFrame(hits.map { case (h, _) => Row(h.repoId, h.name, h.score) },
-          QueryExecutor.RepoSchema)
+          QueryExecutor.RepoEncoder)
       case None => sparkRepo(bs, k)
     }
   }
@@ -804,25 +824,30 @@ class QueryExecutor(searcher: Searcher,
     * driver-local path answers. highlights = array of (start, end) char
     * ranges on the name.
     */
-  def executeRepoHighlightedDF(input: String, k: Int): DataFrame =
-    repoHighlighted(repoBranches(input, compile(input)), k)
-
-  private def repoHighlighted(bs: Seq[CompiledBranch], k: Int): DataFrame =
+  def executeRepoHighlightedDF(input: String, k: Int): DataFrame = {
+    val bs = repoBranches(input, compile(input))
     localRepo(bs, k) match {
       case Some(hits) =>
         localFrame(hits.map { case (h, hls) =>
-          Row(h.repoId, h.name, h.score, hls.map(Row.fromTuple))
-        }, QueryExecutor.RepoHighlightSchema)
-      case None =>
-        val patterns = bs.map(_.repoFilter)
-          .map(f => (f.source, f.caseSens))
-        sparkRepo(bs, k)
-          .as[RepoHit]
-          .map(r => (r.repoId, r.name, r.score,
-            QueryExecutor.repoHighlights(r.name, patterns)))
-          .toDF(QueryExecutor.RepoHighlightSchema.fieldNames.toIndexedSeq: _*)
-          .orderBy($"score".desc, $"repoId".asc)
+          Row(h.repoId, h.name, h.score, hls)
+        }, QueryExecutor.RepoHighlightEncoder)
+      case None => sparkRepoHighlighted(bs, k)
     }
+  }
+
+  /** executeRepoHighlightedDF as a Spark plan: the highlights are mapped
+    * over sparkRepo's ≤k rows.
+    */
+  private def sparkRepoHighlighted(bs: Seq[CompiledBranch], k: Int): DataFrame = {
+    val patterns = bs.map(_.repoFilter)
+      .map(f => (f.source, f.caseSens))
+    sparkRepo(bs, k)
+      .as[RepoHit]
+      .map(r => (r.repoId, r.name, r.score,
+        QueryExecutor.repoHighlights(r.name, patterns)))
+      .toDF(QueryExecutor.RepoHighlightSchema.fieldNames.toIndexedSeq: _*)
+      .orderBy($"score".desc, $"repoId".asc)
+  }
 
   /** Dispatched heterogeneous entry point (the reference's query_with,
     * query/execute.rs:344-390): routes to the winning reader and returns a
@@ -847,11 +872,9 @@ class QueryExecutor(searcher: Searcher,
           .filter(l => l.isRegex || l.value.nonEmpty).map(_.regexStr)
         localRows(bs, k, fields = true, content = false) match {
           case Some(rows) =>
-            localFrame(rows.map { r =>
-              val (kind, id, name, path, score, hls) = QueryExecutor.fileHit(
-                FileHitRow(r.docId, r.score, r.repo, r.path), pathPatterns)
-              Row(kind, id, name, path, score, hls.map(Row.fromTuple))
-            }, QueryExecutor.FileHitSchema)
+            localFrame(rows.map(r => Row.fromTuple(QueryExecutor.fileHit(
+              FileHitRow(r.docId, r.score, r.repo, r.path), pathPatterns))),
+              QueryExecutor.FileHitEncoder)
           case None =>
             // docs side pruned to the ≤k winners via an explicit broadcast
             // of the page-sized hit set (mirrors executeWithSnippets;
@@ -867,9 +890,17 @@ class QueryExecutor(searcher: Searcher,
               .orderBy($"score".desc, $"id".asc)
         }
       case Some(ReaderKind.Repo) =>
-        repoHighlighted(repoBranches(input, bs), k)
-          .select(lit("repo").as("kind"), $"repoId".as("id"), $"name",
-            lit(null: String).as("path"), $"score", $"highlights")
+        val rs = repoBranches(input, bs)
+        localRepo(rs, k) match {
+          case Some(hits) =>
+            localFrame(hits.map { case (h, hls) =>
+              Row("repo", h.repoId, h.name, null, h.score, hls)
+            }, QueryExecutor.RepoAnyEncoder)
+          case None =>
+            sparkRepoHighlighted(rs, k)
+              .select(lit("repo").as("kind"), $"repoId".as("id"), $"name",
+                lit(null: String).as("path"), $"score", $"highlights")
+        }
       case Some(ReaderKind.Open) =>
         // deterministic listing page: distinct() has no order, so the
         // limit must follow an explicit sort

@@ -1,15 +1,18 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.CorpusGen
-import graft.engine.{QueryExecutor, Searcher}
+import graft.engine.{Hit, QueryExecutor, Searcher}
 import graft.index.{IncrementalIndexer, IndexBuilder, MultiSearcher}
 import graft.oracle.OracleEngine
 
@@ -56,6 +59,40 @@ class LocalPathSpec extends AnyFunSuite {
   private def shape(df: Dataset[_]): Seq[(String, DataType, Boolean)] =
     df.schema.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq
 
+  /** A collected value's class and, for a row, its schema, nested rows and
+    * sequences included.
+    */
+  private def anatomy(v: Any): Any = v match {
+    case r: Row => (r.getClass, r.schema, r.toSeq.map(anatomy))
+    case s: scala.collection.Seq[_] => (s.getClass, s.map(anatomy).toSeq)
+    case null => null
+    case x => x.getClass
+  }
+
+  /** `rows`, the collect() of the local frame `got`, are what a Spark-planned
+    * collect of the same frame returns, and are built like `want`, the
+    * Spark path's rows: each row carries the frame's schema, the nested
+    * highlight structs Spark's struct schema, and every field the Spark
+    * path's class. count() and head(1) agree with them.
+    */
+  private def collectsLikeSpark(got: Dataset[_], rows: Seq[Any],
+                                want: Seq[Any], what: String): Unit = {
+    val planned = got.toDF().collect().toSeq
+    rows.foreach {
+      case r: Row => assert(r.schema == got.schema, what)
+      case h => assert(h.getClass == classOf[Hit], what)
+    }
+    assert(rows.map {
+      case h: Hit => Row(h.docId, h.score)
+      case r => r
+    } == planned, what)
+    if (rows.forall(_.isInstanceOf[Row]))
+      assert(rows.map(anatomy) == planned.map(anatomy), what)
+    assert(rows.map(anatomy) == want.map(anatomy), what)
+    assert(got.count() == rows.size, what)
+    assert(got.head(1).toSeq == rows.take(1), what)
+  }
+
   // plain literals (one and two tokens), symbol, and regex targets: one
   // required gram (fragment narrowing), several, a fused two-word regex
   val targets = Seq("parse", "index", "read_token", "symbol:read",
@@ -66,19 +103,26 @@ class LocalPathSpec extends AnyFunSuite {
     test(s"local == oracle == Spark path: '$q' k=$k") {
       val got = local.execute(q, k)
       assert(isLocal(got), got.queryExecution.executedPlan.toString)
-      val hits = got.collect().map(h => (h.docId, h.score)).toSeq
+      val gotHits = got.collect().toSeq
+      val hits = gotHits.map(h => (h.docId, h.score))
       assert(hits.nonEmpty)
       assert(hits == oracle.executeQuery(q, k),
         s"\nlocal:  ${hits.take(5)}\noracle: ${oracle.executeQuery(q, k).take(5)}")
-      assert(hits == viaSpark.execute(q, k).collect()
-        .map(h => (h.docId, h.score)).toSeq)
+      val sparkHits = viaSpark.execute(q, k).collect().toSeq
+      assert(gotHits == sparkHits)
+      collectsLikeSpark(got, gotHits, sparkHits, "execute")
       val any = local.executeAny(q, k)
       assert(isLocal(any))
-      assert(any.collect().toSeq == viaSpark.executeAny(q, k).collect().toSeq)
+      val (anyRows, sparkAny) =
+        (any.collect().toSeq, viaSpark.executeAny(q, k).collect().toSeq)
+      assert(anyRows == sparkAny)
+      collectsLikeSpark(any, anyRows, sparkAny, "executeAny")
       val page = local.executeWithSnippets(q, k)
       assert(isLocal(page))
-      assert(page.collect().toSeq ==
+      val (pageRows, sparkPage) = (page.collect().toSeq,
         viaSpark.executeWithSnippets(q, k).collect().toSeq)
+      assert(pageRows == sparkPage)
+      collectsLikeSpark(page, pageRows, sparkPage, "executeWithSnippets")
       // the local frames have the Spark frames' schemas
       assert(shape(got) == shape(viaSpark.execute(q, k)))
       assert(shape(any) == shape(viaSpark.executeAny(q, k)))
@@ -114,8 +158,8 @@ class LocalPathSpec extends AnyFunSuite {
   val bareRepo = Seq("repo:repo3", "repo:org", "org:org1 repo:repo",
     "repo:REPO3")
 
-  /** The local answers of `q` equal `spark`'s (rows and frame shapes) and
-    * run no Spark plan.
+  /** The local answers of `q` equal `spark`'s (rows, the rows' schemas and
+    * field classes, and frame shapes) and run no Spark plan.
     */
   private def sameAsSpark(qe: QueryExecutor, spark: QueryExecutor, q: String,
                           k: Int): Unit = {
@@ -129,7 +173,9 @@ class LocalPathSpec extends AnyFunSuite {
       val (got, want) = (f(qe), f(spark))
       assert(isLocal(got), s"'$q' k=$k: ${got.queryExecution.executedPlan}")
       assert(!isLocal(want), s"'$q' k=$k")
-      assert(got.collect().toSeq == want.collect().toSeq, s"'$q' k=$k")
+      val (rows, wantRows) = (got.collect().toSeq, want.collect().toSeq)
+      assert(rows == wantRows, s"'$q' k=$k")
+      collectsLikeSpark(got, rows, wantRows, s"'$q' k=$k")
       assert(shape(got) == shape(want), s"'$q' k=$k")
     }
   }
@@ -167,24 +213,48 @@ class LocalPathSpec extends AnyFunSuite {
     assert(mSpark.executeAny(deleted, 10).collect().isEmpty)
   }
 
-  test("a local executeAny / executeWithSnippets submits zero Spark jobs") {
+  /** The Spark jobs and the SQL executions that `body` starts. Listener
+    * events arrive in submission order, so `body` is followed by a marker
+    * job: once it is seen, every earlier event has been counted.
+    */
+  private def started(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val marker = new java.util.concurrent.CountDownLatch(1)
+    val (jobs, executions) = (new AtomicInteger(0), new AtomicInteger(0))
+    val marker = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
             e.properties.getProperty("graft.test.marker") != null)
           marker.countDown()
         else jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+        case _ =>
+      }
     }
-    // warm: the dict cache, stats and the index footers load once, for
-    // the index and for its repo sub-index
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      assert(marker.await(60, TimeUnit.SECONDS))
+      (jobs.get(), executions.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Warms what loads once (the dict cache, stats and the index footers,
+    * for the index and for its repo sub-index).
+    */
+  private def warmLocal(): Unit = {
     local.executeAny("parse", 10).collect()
     local.executeWithSnippets("/return [a-z]+/", 10).collect()
     local.executeAny("repo:repo1", 10).collect()
-    sc.addSparkListener(listener)
-    try {
+  }
+
+  test("a local executeAny / executeWithSnippets submits zero Spark jobs") {
+    warmLocal()
+    val (jobs, _) = started {
       // plain, symbol, regex and fused-regex targets, then the benchmark's
       // filtered shapes: repo:, lang: and a scored path: with a term
       for (q <- Seq("parse", "symbol:read", "/return [a-z]+/", "if return",
@@ -194,23 +264,34 @@ class LocalPathSpec extends AnyFunSuite {
       }
       // and a bare repo: (a repo-name search, not a content query)
       local.executeAny("repo:org2", 10).collect()
-      // listener events arrive in submission order: once the marker job
-      // is seen, every earlier job start has been counted
-      sc.setLocalProperty("graft.test.marker", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.test.marker", null)
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get() == 0, s"${jobs.get()} Spark jobs on the local path")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"$jobs Spark jobs on the local path")
+  }
+
+  test("a local answer's collect() posts zero SQL executions, on every face") {
+    warmLocal()
+    val calls = Seq[(String, () => Dataset[_])](
+      "execute" -> (() => local.execute("parse", 10)),
+      "executeAny" -> (() => local.executeAny("parse", 10)),
+      "executeAny regex" -> (() => local.executeAny("/return [a-z]+/", 10)),
+      "executeAny labelled" -> (() => local.executeAny("repo:repo1 parse", 10)),
+      "executeAny bare repo:" -> (() => local.executeAny("repo:org2", 10)),
+      "executeWithSnippets" -> (() => local.executeWithSnippets("path:mod1 if", 10)),
+      "executeRepo" -> (() => local.executeRepo("org:org1 repo:repo", 10)),
+      "executeRepoHighlightedDF" ->
+        (() => local.executeRepoHighlightedDF("repo:repo3", 10)))
+    for ((face, call) <- calls) {
+      val (jobs, executions) = started(assert(call().collect().nonEmpty, face))
+      assert((jobs, executions) == ((0, 0)),
+        s"$face: $jobs Spark jobs, $executions SQL executions")
+    }
   }
 
   test("local queries create no broadcast") {
     val blocks = org.apache.spark.SparkEnv.get.blockManager
     def broadcasts() = blocks.getMatchingBlockIds(_.isBroadcast).toSet
     // warm, as above: what loads once may broadcast
-    local.executeAny("parse", 10).collect()
-    local.executeWithSnippets("/return [a-z]+/", 10).collect()
-    local.executeAny("repo:repo1", 10).collect()
+    warmLocal()
     val before = broadcasts()
     for (q <- Seq("parse", "symbol:read", "/return [a-z]+/", "if return",
                   "repo:repo1 parse", "lang:rust index", "path:mod1 if",

@@ -515,7 +515,9 @@ class LocalIndexSpec extends AnyFunSuite {
       () => qe.executeAny(twoPass, 10),
       () => qe.execute(twoPass, 10).toDF(),
       () => qe.executeWithSnippets("index", 100),
-      () => qe.executeWithSnippets(twoPass, 10))
+      () => qe.executeWithSnippets(twoPass, 10),
+      () => qe.executeRepo("repo:repo1", 10),
+      () => qe.executeAny("repo:repo1", 10))
     def run(q: () => DataFrame): Seq[Row] = {
       val df = q()
       assert(df.queryExecution.executedPlan.toString.contains("LocalTableScan"))
